@@ -39,10 +39,10 @@ object Bench {
     // column to actually be evaluated. A bare count() lets Catalyst prune the whole
     // projection (and eliminate sorts), under-measuring expression work. bit_xor,
     // not sum: summing 64-bit hashes overflows LONG under ANSI mode.
+    // No fallback: a consume that throws is an error for onePass, never a time.
     def consume(df: DataFrame): Unit =
-      try df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
+      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
         .agg(expr("bit_xor(h)")).head()
-      catch { case _: Throwable => df.count() } // un-hashable column type: weaker action
     // A query that THROWS must not be reported as a (fast) time — round-6's loader
     // break produced 78 bogus 0.05s "times" that made a broken bench look healthy.
     // Errors are tracked PER PASS: a pass-1 failure that succeeds in pass 2 is a

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md / FIXTURES.md §A).
   *
@@ -9,6 +13,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory as a parameter so the same plan runs at sf0.001 (smoke), sf0.01 (oracle)
   * and sf0.1+ (bench) — and, unchanged, on a real cluster at any scale: nothing below
   * hard-codes partition counts or collects to the driver.
+  *
+  * Schema cache. Inferring a parquet footer schema is one Spark job (~0.1 s) per
+  * `spark.read.parquet` call; the corpus makes ~690 such calls. So each table's
+  * footer schema is inferred once per (session, path) and every read passes it
+  * back via `spark.read.schema(footer).parquet(path)`, which fires no job.
+  *  - Key: the session is held weakly (a stopped, unreferenced session's entries
+  *    go with it); within a session, the table's root path.
+  *  - Invalidation: each hit is checked against the root path's modification time
+  *    (one `FileSystem.getFileStatus`, not a Spark job). A table rewritten in place
+  *    — a Spark overwrite recreates the directory, a file copy restamps the file —
+  *    is inferred again.
+  *  - Still per call: file listing (files added to a table directory are seen) and
+  *    a fresh relation, so self-joins of two reads get distinct attribute IDs.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,19 +35,48 @@ object Tables {
   /** Dimension tables small enough to broadcast at any realistic scale factor. */
   val broadcastDims: Set[String] = Set("region", "nation", "supplier")
 
+  private final case class Footer(mtime: Long, schema: StructType)
+
+  private val footers = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Footer]]())
+
+  /** The footer schema of the parquet table at `path`, inferred at most once per
+    * (session, path, modification time). Concurrent first reads may both infer;
+    * they agree, so the last write wins harmlessly. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val bySession =
+      footers.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Footer]())
+    val hit = bySession.get(path)
+    if (hit != null && hit.mtime == mtime) hit.schema
+    else {
+      val schema = spark.read.parquet(path).schema
+      bySession.put(path, Footer(mtime, schema))
+      schema
+    }
+  }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, s"$dir/$name.parquet")
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
 
   /** `events.ts` has shipped with three physical parquet types across testdata
     * generations: TIMESTAMP(NANOS) (reads as long ns under the legacy conf),
     * TIMESTAMP_MICROS with isAdjustedToUTC=false (reads as TIMESTAMP_NTZ), and
-    * plain UTC TIMESTAMP_MICROS. The loader adapts off the footer schema so a
-    * regenerated dataset never breaks the 100+ queries built on this table. */
-  private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    // no-op unless the footer really is TIMESTAMP(NANOS)
+    * plain UTC TIMESTAMP_MICROS. The loaders adapt off the footer schema so a
+    * regenerated dataset never breaks the 100+ queries built on this table.
+    * Returns the raw (footer) schema of `dir/events.parquet`; the batch and the
+    * streaming loader both read with it and normalize with [[eventsTs]]. */
+  private[graft] def eventsSchema(spark: SparkSession, dir: String): StructType = {
+    // no-op unless the footer really is TIMESTAMP(NANOS); set before the first
+    // inference and kept for every later read with the inferred LongType
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    footerSchema(spark, s"$dir/events.parquet")
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
@@ -40,10 +86,10 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val raw = eventsRaw(spark, dir)
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventsTs(spark.read.schema(eventsSchema(spark, dir)).parquet(s"$dir/events.parquet"))
+  /** Normalizes a raw events frame's `ts` to TimestampType (µs). */
+  private[graft] def eventsTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       // `div` = integral division: ns epochs (~1.7e18) exceed double's 2^53 exact
       // range, so float division here would corrupt the low microseconds.
@@ -53,7 +99,6 @@ object Tables {
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
-  }
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
 

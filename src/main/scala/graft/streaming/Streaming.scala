@@ -6,7 +6,6 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig,
   TimeMode, TimerValues, ValueState}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2b "Streaming"): the same windowing /
   * dedup / join expressions as the batch queries in graft.queries.EventsQ, wired as
@@ -18,39 +17,13 @@ import org.apache.spark.sql.types._
   * (`processAllAvailable`), asserting stream == batch on the same data. */
 object Streaming {
 
-  /** The events schema as stored, with `ts` as whatever physical type the current
-    * testdata generation carries (int64 nanos / TIMESTAMP_NTZ / TIMESTAMP — see
-    * graft.Tables.events). Streaming file sources need the schema upfront, so we
-    * probe the footer via a batch read of the same file. */
-  private def rawSchema(tsType: org.apache.spark.sql.types.DataType) = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", tsType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** Probed physical type of `ts`, cached per events file: the footer read is a
-    * driver-side metadata fetch, but constructing a fresh batch DataFrame on
-    * EVERY stream construction (18 streaming specs × per-test streams) is
-    * redundant work — the type only changes when the driver regenerates
-    * testdata, which always lands in a new JVM. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
-
-  /** readStream over the events parquet, ts→TimestampType(µs) normalization identical
-    * to graft.Tables.events. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = tsTypeCache.computeIfAbsent(s"$dir/events.parquet",
-      p => spark.read.parquet(p).schema("ts").dataType)
+  /** readStream over the events parquet, with the footer schema and the
+    * ts→TimestampType(µs) normalization of graft.Tables.events. */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
     // streaming file sources need a directory: scan the sf dir, globbed to events
-    val raw = spark.readStream.schema(rawSchema(tsType))
+    graft.Tables.eventsTs(spark.readStream.schema(graft.Tables.eventsSchema(spark, dir))
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    tsType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
+      .parquet(dir))
 
   /** Tumbling-window counts with watermark-bounded state. */
   def tumblingCounts(events: DataFrame, width: String, watermark: String): DataFrame =

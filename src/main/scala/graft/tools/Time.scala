@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
   *
   * Consumes with the SAME all-column hash action as graft.Bench — a bare count()
   * lets Catalyst prune the projection (and eliminate sorts), timing a different,
-  * cheaper plan than the one the bench measures. */
+  * cheaper plan than the one the bench measures. A query that fails to consume
+  * aborts the run with its error; it is never timed. */
 object Time {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -27,9 +28,8 @@ object Time {
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.lineitem(spark, sfDir).count() // warm-up
     def consume(df: DataFrame): Unit =
-      try df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
+      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
         .agg(expr("bit_xor(h)")).head()
-      catch { case _: Throwable => df.count() }
     args(0).split(",").foreach { q =>
       (1 to reps).foreach { r =>
         val t0 = System.nanoTime()

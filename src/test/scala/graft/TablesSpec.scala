@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,13 +33,45 @@ class TablesSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
   }
 
-  private def roundtrip(tag: String)(write: String => Unit): Unit = {
-    val dir = Files.createTempDirectory(s"tables_$tag").toString
-    write(dir)
+  private def assertNormalized(tag: String, dir: String): Unit = {
     val got = Tables.events(spark, dir)
     assert(got.schema("ts").dataType === TimestampType, s"[$tag] normalized type")
     val row = got.select(unix_micros(col("ts"))).head()
     assert(row.getLong(0) === micros, s"[$tag] instant preserved")
+  }
+
+  private def roundtrip(tag: String)(write: String => Unit): Unit = {
+    val dir = Files.createTempDirectory(s"tables_$tag").toString
+    write(dir)
+    assertNormalized(tag, dir)
+  }
+
+  /** Spark jobs started by `body`, counted by job group. Listener events arrive
+    * in order, so once a later sentinel job's start is seen, every job `body`
+    * started has been counted. */
+  private def jobsFiredBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"tables-spec-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val started = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(started.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(f: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try f finally sc.clearJobGroup()
+      }
+      inGroup(group)(body)
+      inGroup(sentinel)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains(sentinel), "listener never saw the sentinel job")
+      started.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("events loader adapts: int64 ts (nanos-as-long read shape)") {
@@ -62,5 +96,50 @@ class TablesSpec extends AnyFunSuite {
     val batch = Tables.events(spark, dir)
     val stream = graft.streaming.Streaming.eventsStream(spark, dir)
     assert(stream.schema === batch.schema)
+  }
+
+  test("a repeated Tables read of the same table fires no Spark job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tables_jobs").toString
+    Seq((1L, "a"), (2L, "b")).toDF("o_orderkey", "o_comment")
+      .coalesce(1).write.parquet(s"$dir/orders.parquet")
+    writeEvents(dir, timestamp_micros(lit(micros)).cast(TimestampNTZType))
+    // the first read of each table infers its footer: the counter sees it
+    assert(jobsFiredBy(Tables(spark, dir, "orders")) >= 1)
+    assert(jobsFiredBy(Tables(spark, dir, "events")) >= 1)
+    assert(jobsFiredBy {
+      Tables(spark, dir, "orders"); Tables(spark, dir, "events")
+    } === 0)
+    assert(Tables(spark, dir, "orders").count() === 2)
+  }
+
+  test("a self-join of two Tables reads resolves with distinct attribute IDs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tables_selfjoin").toString
+    val rows = (0 until 6).map(n => (n.toLong, (n % 3).toLong))
+    rows.toDF("n_nationkey", "n_regionkey")
+      .coalesce(1).write.parquet(s"$dir/nation.parquet")
+    val a = Tables(spark, dir, "nation")
+    val b = Tables(spark, dir, "nation")
+    val ids = (df: org.apache.spark.sql.DataFrame) =>
+      df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert(ids(a).intersect(ids(b)).isEmpty)
+    val got = a.join(b, a("n_regionkey") === b("n_regionkey"))
+      .select(a("n_nationkey"), b("n_nationkey")).as[(Long, Long)].collect().toSet
+    val want = for ((x, rx) <- rows; (y, ry) <- rows if rx == ry) yield (x, y)
+    assert(got === want.toSet)
+  }
+
+  test("an events table rewritten in place with a new ts type is re-inferred") {
+    val dir = Files.createTempDirectory("tables_rewrite").toString
+    writeEvents(dir, expr(s"${micros}L * 1000"))
+    assertNormalized("longns", dir)
+    assert(Tables.eventsSchema(spark, dir)("ts").dataType === LongType)
+    writeEvents(dir, timestamp_micros(lit(micros)).cast(TimestampNTZType))
+    assertNormalized("ntz", dir)
+    assert(Tables.eventsSchema(spark, dir)("ts").dataType === TimestampNTZType)
+    writeEvents(dir, timestamp_micros(lit(micros)))
+    assertNormalized("ltz", dir)
+    assert(Tables.eventsSchema(spark, dir)("ts").dataType === TimestampType)
   }
 }
