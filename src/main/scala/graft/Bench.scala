@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query wall seconds.
   *
@@ -16,33 +13,46 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_PASSES").flatMap(_.toIntOption).getOrElse(2))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Sort-shuffle writer past 64 reduce buckets (round 15, VERDICT r14
-      // ask #3): Spark's default bypassMergeThreshold=200 makes every shuffle
-      // at the cluster-default 200 partitions use the bypass writer — one
-      // file per (map task × bucket); measured 2.5x wall on dedup_minhash_lsh
-      // at sf0.1 purely from that. 64 keeps the local 32-bucket shape on the
-      // bypass fast path (bit-identical to the committed floors) and gives
-      // wide shuffles the single-spill sort writer, as on a real cluster.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Self-reported regression gate: compare against the most recent prior
+    // per-query snapshot AT THE SAME SF (env override > the committed
+    // BENCH_LOCAL.json snapshot > target/bench_queries.json — the driver's
+    // BENCH_r*.json files truncate their per-query tails, so they can't be
+    // baselines) and emit any query that got >30% AND >0.15s slower. Queries
+    // only on one side are skipped (set drift between rounds isn't a
+    // regression). A snapshot counts as absent only when its file does not
+    // exist or is for another SF; an unreadable or malformed one is an error,
+    // read before any query runs, since skipping it would switch the gate off.
+    def parseSnapshot(p: java.nio.file.Path): Option[Map[String, Double]] =
+      if (!java.nio.file.Files.exists(p)) None else {
+        val txt = java.nio.file.Files.readString(p)
+        def bad(why: String) =
+          throw new IllegalStateException(s"bench snapshot $p: $why")
+        val sf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1))
+          .getOrElse(bad("no \"sf\" field"))
+        if (sf != sfDir) None else {
+          val qsec = txt.indexOf("\"queries\":{")
+          val end = if (qsec < 0) -1 else txt.indexOf('}', qsec)
+          if (end < 0) bad("no complete \"queries\" object")
+          val entry = "\"([^\"]+)\":(.+)".r
+          val m = txt.substring(qsec + 11, end).split(',').filter(_.nonEmpty)
+            .flatMap {
+              case entry(_, "null") => None
+              case entry(k, v) =>
+                Some(k -> v.toDoubleOption.getOrElse(bad(s"bad time '$v' for $k")))
+              case e => bad(s"malformed entry '$e'")
+            }.toMap
+          if (m.nonEmpty) Some(m) else None
+        }
+      }
+    val baseline: Map[String, Double] =
+      (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").map(java.nio.file.Paths.get(_)).toSeq ++
+        Seq(java.nio.file.Paths.get("BENCH_LOCAL.json"),
+          java.nio.file.Paths.get("target/bench_queries.json")))
+        .iterator.flatMap(parseSnapshot(_)).nextOption().getOrElse(Map.empty)
+    val spark = Harness.session(s"local[$cpus]", cpus.toInt)
     // warm-up: session init, codegen, file listing
     Tables.lineitem(spark, sfDir).count()
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // All-column-consuming action: XOR of per-row hashes forces every projected
-    // column to actually be evaluated. A bare count() lets Catalyst prune the whole
-    // projection (and eliminate sorts), under-measuring expression work. bit_xor,
-    // not sum: summing 64-bit hashes overflows LONG under ANSI mode.
-    // No fallback: a consume that throws is an error for onePass, never a time.
-    def consume(df: DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
     // A query that THROWS must not be reported as a (fast) time — round-6's loader
     // break produced 78 bogus 0.05s "times" that made a broken bench look healthy.
     // Errors are tracked PER PASS: a pass-1 failure that succeeds in pass 2 is a
@@ -54,7 +64,7 @@ object Bench {
     def onePass(): Map[String, Double] = names.map { name =>
       val t0 = System.nanoTime()
       val ok =
-        try { consume(SparkEntry.queries(name)(spark, sfDir)); true }
+        try { Harness.consume(SparkEntry.queries(name)(spark, sfDir)); true }
         catch { case e: Throwable =>
           lastError(name) =
             Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
@@ -72,33 +82,6 @@ object Bench {
         "\"" + k + "\":" + (if (best(k).isInfinity) "null" else best(k).toString))
       .mkString("{", ",", "}")
     val total = best.values.filterNot(_.isInfinity).sum
-    // Self-reported regression gate: compare against the most recent prior
-    // per-query snapshot AT THE SAME SF (env override > the committed
-    // BENCH_LOCAL.json snapshot > target/bench_queries.json — the driver's
-    // BENCH_r*.json files truncate their per-query tails, so they can't be
-    // baselines) and emit any query that got >30% AND >0.15s slower. Queries
-    // only on one side are skipped (set drift between rounds isn't a
-    // regression).
-    def parseSnapshot(p: java.nio.file.Path): Option[Map[String, Double]] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        if (!txt.contains("\"sf\":\"" + sfDir + "\"")) None
-        else {
-          val qsec = txt.indexOf("\"queries\":{")
-          if (qsec < 0) None else {
-            val body = txt.substring(qsec + 11, txt.indexOf('}', qsec))
-            val m = "\"([^\"]+)\":([0-9][0-9.eE+-]*)".r
-              .findAllMatchIn(body)
-              .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap
-            if (m.nonEmpty) Some(m) else None
-          }
-        }
-      } catch { case _: Throwable => None }
-    val baseline: Map[String, Double] =
-      (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").map(java.nio.file.Paths.get(_)).toSeq ++
-        Seq(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-          java.nio.file.Paths.get("target/bench_queries.json")))
-        .iterator.flatMap(parseSnapshot(_)).nextOption().getOrElse(Map.empty)
     // Host-speed normalization: two runs of the SAME code can differ by a
     // uniform 10-30% (VM steal, cache state), which would flag dozens of
     // phantom regressions. Scale the baseline by the common-query total
@@ -134,7 +117,7 @@ object Bench {
       val passes = if (baseline(k) * scale < 1.5) 4 else 2
       val ts = (1 to passes).flatMap { _ =>
         val t0 = System.nanoTime()
-        val ok = try { consume(SparkEntry.queries(k)(spark, sfDir)); true }
+        val ok = try { Harness.consume(SparkEntry.queries(k)(spark, sfDir)); true }
           catch { case _: Throwable => false }
         if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }
@@ -178,51 +161,49 @@ object Bench {
       .mkString("{", ",", "}")
     errors.foreach { case (k, v) => System.err.println(s"[bench] FAILED $k: $v") }
     val full = s"""{"metric":"total","value":$total,"unit":"sec","n_errors":${errors.size},"errors":$errJson,"n_regressions":${regressions.size},"regressions":$regJson,"top10_sec":$runTop,"top10_base_sec":$baseTop,"scale":$scale,"queries":$qs,"sf":"$sfDir","passes":$passes}"""
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
-      java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_queries.json"),
-        full.getBytes("UTF-8"))
-      // Durable round-over-round baseline (committed): only the canonical
-      // driver configuration updates it, so ad-hoc local runs at other SFs
-      // or pass counts can't poison the comparison base. Two further guards:
-      // (1) only REGRESSION-FREE runs advance the base — otherwise a real
-      //     regression is reported once and then becomes its own baseline,
-      //     self-resetting the gate; (2) the refresh MIN-MERGES per query
-      //     against the prior committed floor (same best-of-passes philosophy
-      //     as the in-run min) — a wholesale overwrite would let one noisy
-      //     host window inflate a query's floor 2-3x and blind the >30% gate
-      //     for it in every later round. Dropped queries leave the file;
-      //     comparison skips one-sided names anyway.
-      // Ratchet-leak guard (VERDICT r12 ask #2): the regression gate above
-      // host-normalizes by `scale`, so a UNIFORM slowdown never flags — and
-      // without this guard it would silently refresh into BENCH_LOCAL (new
-      // queries would enter the floor file at inflated times). BENCH_LOCAL's
-      // min-merged floors ARE the pinned epoch: `scale` vs them is exactly
-      // the cumulative drift since the all-time-best run, so a cumulative
-      // factor > 1.3x blocks the refresh (warn loudly; existing floors are
-      // min-merge-protected regardless, this keeps inflated NEW entries out
-      // and makes sustained drift visible in every run's "scale" field).
-      val scaleDriftBlocked = scale > 1.3
-      if (scaleDriftBlocked)
-        System.err.println(f"[bench] HOST-SCALE DRIFT $scale%.2fx vs committed " +
-          "floors exceeds 1.3x — BENCH_LOCAL refresh BLOCKED (uniform slowdown " +
-          "is invisible to the per-query gate by construction; investigate " +
-          "before refreshing the baseline)")
-      if (sfDir == "/root/testdata/sf0.1" && passes >= 2 && errors.isEmpty
-          && regressions.isEmpty && !scaleDriftBlocked) {
-        val prior = parseSnapshot(java.nio.file.Paths.get("BENCH_LOCAL.json"))
-          .getOrElse(Map.empty)
-        val merged = names.filterNot(k => best(k).isInfinity).map { k =>
-          k -> math.min(best(k), prior.getOrElse(k, Double.PositiveInfinity))
-        }
-        val mq = merged.map { case (k, v) => "\"" + k + "\":" + v.toString }
-          .mkString("{", ",", "}")
-        val mtotal = merged.map(_._2).sum
-        val mjson = s"""{"metric":"total","value":$mtotal,"unit":"sec","n_errors":0,"errors":{},"n_regressions":0,"regressions":{},"queries":$mq,"sf":"$sfDir","passes":$passes}"""
-        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-          mjson.getBytes("UTF-8"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+    java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_queries.json"),
+      full.getBytes("UTF-8"))
+    // Durable round-over-round baseline (committed): only the canonical
+    // driver configuration updates it, so ad-hoc local runs at other SFs
+    // or pass counts can't poison the comparison base. Two further guards:
+    // (1) only REGRESSION-FREE runs advance the base — otherwise a real
+    //     regression is reported once and then becomes its own baseline,
+    //     self-resetting the gate; (2) the refresh MIN-MERGES per query
+    //     against the prior committed floor (same best-of-passes philosophy
+    //     as the in-run min) — a wholesale overwrite would let one noisy
+    //     host window inflate a query's floor 2-3x and blind the >30% gate
+    //     for it in every later round. Dropped queries leave the file;
+    //     comparison skips one-sided names anyway.
+    // Ratchet-leak guard (VERDICT r12 ask #2): the regression gate above
+    // host-normalizes by `scale`, so a UNIFORM slowdown never flags — and
+    // without this guard it would silently refresh into BENCH_LOCAL (new
+    // queries would enter the floor file at inflated times). BENCH_LOCAL's
+    // min-merged floors ARE the pinned epoch: `scale` vs them is exactly
+    // the cumulative drift since the all-time-best run, so a cumulative
+    // factor > 1.3x blocks the refresh (warn loudly; existing floors are
+    // min-merge-protected regardless, this keeps inflated NEW entries out
+    // and makes sustained drift visible in every run's "scale" field).
+    val scaleDriftBlocked = scale > 1.3
+    if (scaleDriftBlocked)
+      System.err.println(f"[bench] HOST-SCALE DRIFT $scale%.2fx vs committed " +
+        "floors exceeds 1.3x — BENCH_LOCAL refresh BLOCKED (uniform slowdown " +
+        "is invisible to the per-query gate by construction; investigate " +
+        "before refreshing the baseline)")
+    if (sfDir == "/root/testdata/sf0.1" && passes >= 2 && errors.isEmpty
+        && regressions.isEmpty && !scaleDriftBlocked) {
+      val prior = parseSnapshot(java.nio.file.Paths.get("BENCH_LOCAL.json"))
+        .getOrElse(Map.empty)
+      val merged = names.filterNot(k => best(k).isInfinity).map { k =>
+        k -> math.min(best(k), prior.getOrElse(k, Double.PositiveInfinity))
       }
-    } catch { case _: Throwable => () }
+      val mq = merged.map { case (k, v) => "\"" + k + "\":" + v.toString }
+        .mkString("{", ",", "}")
+      val mtotal = merged.map(_._2).sum
+      val mjson = s"""{"metric":"total","value":$mtotal,"unit":"sec","n_errors":0,"errors":{},"n_regressions":0,"regressions":{},"queries":$mq,"sf":"$sfDir","passes":$passes}"""
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
+        mjson.getBytes("UTF-8"))
+    }
     println(full)
     // The driver parses the LAST JSON line from a small tail-capture window,
     // so this stays short (the full per-query map would blow the window and

@@ -206,26 +206,9 @@ object Main {
       }
     }
     val path = manifest.getOrElse(usageExit("missing job manifest path"))
-    def buildSpark(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("graft")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        // Sort-shuffle writer past 64 reduce buckets (round 15, VERDICT r14
-        // ask #3): Spark's default bypassMergeThreshold=200 makes every shuffle
-        // at the cluster-default 200 partitions use the bypass writer — one
-        // file per (map task × bucket); measured 2.5x wall on dedup_minhash_lsh
-        // at sf0.1 purely from that. 64 keeps the local 32-bucket shape on the
-        // bypass fast path (bit-identical to the committed floors) and gives
-        // wide shuffles the single-spill sort writer, as on a real cluster.
-        .config("spark.shuffle.sort.bypassMergeThreshold", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def buildSpark(): SparkSession =
+      graft.Harness.session(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val code = runCli(path, commands, dryrun, style, timestamps, testTask,
       colored = autoColor, sink = println, sparkF = buildSpark _)
     // stop only a session main actually started (missing-manifest exits early)

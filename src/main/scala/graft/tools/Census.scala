@@ -1,13 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Batch stage census (round 16): like ProbeStages but takes a COMMA LIST of
-  * queries and censuses each in one warm session — the per-query JVM spin-up
-  * of ProbeStages dominated round-15's measurement loop. Each query is warmed
-  * once, then timed once with the per-stage (tasks, wall ms) breakdown; a
+/** Batch stage census (round 16): takes a COMMA LIST of queries and censuses
+  * each in one warm session, so no query pays a JVM spin-up. Each query is
+  * warmed once, then timed once with the per-stage (tasks, wall ms) breakdown; a
   * control query (tpch_q3_shape) brackets the list so host-load windows are
   * visible in the output.
   *
@@ -17,13 +14,7 @@ object Census {
   def main(args: Array[String]): Unit = {
     val qs = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("local[32]", 32)
     graft.Tables.lineitem(spark, sfDir).count() // warm-up
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -38,14 +29,11 @@ object Census {
           f"ms=${ms.getOrElse(-1L)}%6d ${rdds.take(160)}")
       }
     })
-    def consume(df: DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
     def timeOnce(q: String, census: Boolean): Unit = {
-      consume(graft.SparkEntry.queries(q)(spark, sfDir)) // warm
+      graft.Harness.consume(graft.SparkEntry.queries(q)(spark, sfDir)) // warm
       stages.clear()
       val t0 = System.nanoTime()
-      consume(graft.SparkEntry.queries(q)(spark, sfDir))
+      graft.Harness.consume(graft.SparkEntry.queries(q)(spark, sfDir))
       println(f"TOTAL $q ${(System.nanoTime() - t0) / 1e9}%.2f s")
       if (census) {
         Thread.sleep(1500)

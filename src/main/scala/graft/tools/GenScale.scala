@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× scale-up of the driver's testdata (VERDICT r10 ask #7):
@@ -48,19 +47,7 @@ object GenScale {
     val out = args(1)
     val factor = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
     val mutate = args.lift(3).contains("mutate")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // Sort-shuffle writer past 64 reduce buckets (round 15, VERDICT r14
-      // ask #3): Spark's default bypassMergeThreshold=200 makes every shuffle
-      // at the cluster-default 200 partitions use the bypass writer — one
-      // file per (map task × bucket); measured 2.5x wall on dedup_minhash_lsh
-      // at sf0.1 purely from that. 64 keeps the local 32-bucket shape on the
-      // bypass fast path (bit-identical to the committed floors) and gives
-      // wide shuffles the single-spill sort writer, as on a real cluster.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("local[32]", 32)
     import spark.implicits._
 
     val copies = spark.range(factor).select($"id".cast("long").as("copy"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -141,19 +140,7 @@ object PlanLint {
     // optional second arg: regex over query names (fast local iteration; the
     // committed PLANS.md snapshot is always the full, unfiltered run)
     val nameFilter = pos.lift(1).map(_.r)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // Sort-shuffle writer past 64 reduce buckets (round 15, VERDICT r14
-      // ask #3): Spark's default bypassMergeThreshold=200 makes every shuffle
-      // at the cluster-default 200 partitions use the bypass writer — one
-      // file per (map task × bucket); measured 2.5x wall on dedup_minhash_lsh
-      // at sf0.1 purely from that. 64 keeps the local 32-bucket shape on the
-      // bypass fast path (bit-identical to the committed floors) and gives
-      // wide shuffles the single-spill sort writer, as on a real cluster.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("local[8]", 8)
     // Construction-time plan capture: eager localCheckpoint()/collect() legs
     // execute while the query function is still BUILDING its result frame, so
     // their plans never appear in the final executedPlan (lineage truncation).

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Paired A/B shuffle-shape probe (round 15, VERDICT r14 ask #3): times a
   * query under alternating `spark.sql.shuffle.partitions` values INSIDE one
   * session, so the A:B ratio is immune to the multi-minute host drift that
@@ -19,28 +16,12 @@ object ProbeAB {
     val reps = if (args.length > 2) args(2).toInt else 3
     val pa = if (args.length > 3) args(3) else "32"
     val pb = if (args.length > 4) args(4) else "200"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", pa)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Sort-shuffle writer past 64 reduce buckets (round 15, VERDICT r14
-      // ask #3): Spark's default bypassMergeThreshold=200 makes every shuffle
-      // at the cluster-default 200 partitions use the bypass writer — one
-      // file per (map task × bucket); measured 2.5x wall on dedup_minhash_lsh
-      // at sf0.1 purely from that. 64 keeps the local 32-bucket shape on the
-      // bypass fast path (bit-identical to the committed floors) and gives
-      // wide shuffles the single-spill sort writer, as on a real cluster.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("local[32]", pa.toInt)
     graft.Tables.lineitem(spark, sfDir).count() // warm-up
-    def consume(df: DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
     def run(parts: String): Double = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       val t0 = System.nanoTime()
-      consume(graft.SparkEntry.queries(q)(spark, sfDir))
+      graft.Harness.consume(graft.SparkEntry.queries(q)(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
     run(pa) // warm the query itself once (codegen, file listing, scratch writes)

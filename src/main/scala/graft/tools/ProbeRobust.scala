@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Robustness probe (round 14, VERDICT r13 ask #5): run named queries under a
   * NON-default runtime shape and gate on COMPLETION, not time. Everything else
   * in the gate is tuned at local[32] / 8g / 32 shuffle partitions; a 100-TB
@@ -25,33 +22,14 @@ object ProbeRobust {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Sort-shuffle writer past 64 reduce buckets (round 15, VERDICT r14
-      // ask #3): Spark's default bypassMergeThreshold=200 makes every shuffle
-      // at the cluster-default 200 partitions use the bypass writer — one
-      // file per (map task × bucket); measured 2.5x wall on dedup_minhash_lsh
-      // at sf0.1 purely from that. 64 keeps the local 32-bucket shape on the
-      // bypass fast path (bit-identical to the committed floors) and gives
-      // wide shuffles the single-spill sort writer, as on a real cluster.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("local[32]", parts.toInt)
     println(s"ROBUSTCFG shuffle.partitions=$parts " +
       s"maxHeap=${Runtime.getRuntime.maxMemory() / (1024 * 1024)}m")
     graft.Tables.lineitem(spark, sfDir).count() // warm-up
-    // same all-column-hash consume as Bench/Time: a bare count() times a
-    // pruned plan (QueryDSL gotcha), and here it could also skip the very
-    // aggregate that would have blown up
-    def consume(df: DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
     args(0).split(",").foreach { q =>
       val t0 = System.nanoTime()
       try {
-        consume(graft.SparkEntry.queries(q)(spark, sfDir))
+        graft.Harness.consume(graft.SparkEntry.queries(q)(spark, sfDir))
         println(f"ROBUST $q ok ${(System.nanoTime() - t0) / 1e9}%.2f")
       } catch {
         case e: Throwable =>
