@@ -126,27 +126,21 @@ object Ops {
       graft.llm.Dedup.keepFirst(ctx.view(str(env, "INPUT")), keys, order)
         .createOrReplaceTempView(str(env, "OUTPUT"))
     },
-    // Near-dup collapse: MinHash+LSH banding for candidates, exact Jaccard verify,
-    // keep the lowest id of each near-dup pair (deterministic — banding, hashes,
-    // and the threshold are all reproducible).
+    // Near-dup collapse: drop the victims of graft.llm.Dedup.nearDupVictims — one
+    // shingle array and one (band, sig) signature pass per document, a band
+    // self-join for candidates, exact Jaccard from the two arrays — so the lowest
+    // id of each near-dup pair survives (deterministic: hashes, banding and the
+    // threshold are all reproducible).
     "minhash-dedup" -> { (ctx, env) =>
       val idCol = opt(env, "ID_COL").getOrElse("doc_id")
-      val textCol = opt(env, "TEXT_COL").getOrElse("text")
-      val numHashes = opt(env, "NUM_HASHES").map(_.toInt).getOrElse(12)
-      val bandSize = opt(env, "BAND_SIZE").map(_.toInt).getOrElse(3)
-      val minJaccard = opt(env, "MIN_JACCARD").map(_.toDouble).getOrElse(0.8)
       val docs = ctx.view(str(env, "INPUT"))
-      val sh = graft.llm.Dedup.shingleFrame(docs, idCol, textCol, shingleN = 3)
-        .withColumnRenamed(idCol, "jid").cache()
-      val cands = graft.llm.Dedup.bandedCandidatesWide(
-        graft.llm.Dedup.minhashWide(sh.withColumnRenamed("jid", idCol), idCol,
-          numHashes), idCol, numHashes, bandSize)
-      val victims = graft.llm.Dedup.jaccardFromShingles(cands, sh)
-        .filter(col("jaccard") >= minJaccard)
-        .select(col("id2").as(idCol)).distinct() // id1 < id2: keep the lowest id
-      val out = docs.join(victims, Seq(idCol), "left_anti")
-      out.createOrReplaceTempView(str(env, "OUTPUT"))
-      sh.unpersist()
+      val victims = graft.llm.Dedup.nearDupVictims(docs, idCol,
+        textCol = opt(env, "TEXT_COL").getOrElse("text"),
+        numHashes = opt(env, "NUM_HASHES").map(_.toInt).getOrElse(12),
+        bandSize = opt(env, "BAND_SIZE").map(_.toInt).getOrElse(3),
+        minJaccard = opt(env, "MIN_JACCARD").map(_.toDouble).getOrElse(0.8))
+      docs.join(victims, Seq(idCol), "left_anti")
+        .createOrReplaceTempView(str(env, "OUTPUT"))
     },
     // ANN similarity search from the spec layer: banded sign-LSH top-k over an
     // embedding view (vec_id, embedding) — the scale path, never a cross join.

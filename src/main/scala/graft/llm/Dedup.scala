@@ -35,11 +35,12 @@ object Dedup {
       "left_semi")
   }
 
-  /** MinHash signatures: one row per (id, salt) with the min salted-md5 over the
-    * document's shingle set. `numHashes` salted hashes simulate independent
-    * permutations; min over lexicographic hex is consistent across engines. */
   /** The exploded (id, shingle) frame — the shared input of signature computation and
-    * Jaccard verification. Callers should `.cache()` it when running both. */
+    * Jaccard verification in the exploded composition ([[minhashWide]] →
+    * [[bandedCandidatesWide]] → [[jaccardFromShingles]]), which the corpus dedup
+    * queries and their oracle SQL mirror. Near-dup removal over a document frame
+    * is [[nearDupVictims]], which keeps each shingle set as one array per
+    * document instead of a row per shingle. */
   def shingleFrame(docs: DataFrame, id: String, textCol: String,
       shingleN: Int): DataFrame =
     docs
@@ -51,6 +52,9 @@ object Dedup {
         explode(array_distinct(TextFunctions.ngrams(col("__tk"), shingleN)))
           .as("shingle"))
 
+  /** MinHash signatures: one row per (id, salt) with the min salted-md5 over the
+    * document's shingle set. `numHashes` salted hashes simulate independent
+    * permutations; min over lexicographic hex is consistent across engines. */
   def minhashSignatures(docs: DataFrame, id: String, textCol: String,
       numHashes: Int, shingleN: Int): DataFrame =
     minhashFromShingles(shingleFrame(docs, id, textCol, shingleN), id, numHashes)
@@ -191,6 +195,43 @@ object Dedup {
       .join(sizes.select(col("jid").as("id2"), col("sz").as("sz2")), Seq("id2"))
       .withColumn("jaccard",
         col("n_shared").cast("double") / (col("sz1") + col("sz2") - col("n_shared")))
+  }
+
+  /** Near-duplicate victims by MinHash-LSH over word 3-shingles: the ids `id2` of
+    * every candidate pair `id1 < id2` whose exact shingle Jaccard is at least
+    * `minJaccard`, so anti-joining them keeps the lowest id of each near-dup pair.
+    * Same victims as [[minhashWide]] → [[bandedCandidatesWide]] →
+    * [[jaccardFromShingles]] over [[shingleFrame]] (ids must be unique), without a
+    * row per shingle:
+    *  1. each document's distinct shingle set is one array, staged with the
+    *     expressions of [[shingleFrame]];
+    *  2. [[graft.functions.MinHashBands]] emits its `(band, sig)` rows in one pass
+    *     over that array (bit-identical to the wide signature's bands);
+    *  3. candidates are a self-join on `(band, sig)` of rows that carry no
+    *     array, then `distinct`;
+    *  4. each candidate joins the `(id, array)` frame on `id1` and on `id2`, and
+    *     `n = |s1 ∩ s2|`, `jaccard = n / (|s1| + |s2| − n)` are the integers and
+    *     the division of [[jaccardFromShingles]].
+    * Arrays cross an exchange only in step 4, keyed by a document id; band
+    * buckets are joined, never collected into a row. */
+  def nearDupVictims(docs: DataFrame, id: String, textCol: String, numHashes: Int,
+      bandSize: Int, minJaccard: Double): DataFrame = {
+    val sets = docs
+      .select(col(id), TextFunctions.tokens(col(textCol)).as("__tk"))
+      .select(col(id), array_distinct(TextFunctions.ngrams(col("__tk"), 3)).as("__sh"))
+    val bands = sets.select(col(id),
+      graft.functions.MinHashBands(col("__sh"), numHashes, bandSize))
+    val cands = bands.select(col(id).as("id1"), col("band"), col("sig"))
+      .join(bands.select(col(id).as("id2"), col("band"), col("sig")), Seq("band", "sig"))
+      .filter(col("id1") < col("id2"))
+      .select("id1", "id2").distinct()
+    val n = size(array_intersect(col("s1"), col("s2"))).cast("long")
+    val union = size(col("s1")).cast("long") + size(col("s2")).cast("long") - n
+    cands
+      .join(sets.select(col(id).as("id1"), col("__sh").as("s1")), Seq("id1"))
+      .join(sets.select(col(id).as("id2"), col("__sh").as("s2")), Seq("id2"))
+      .filter(n.cast("double") / union >= minJaccard)
+      .select(col("id2").as(id)).distinct()
   }
 
   /** 16-bit SimHash over the distinct token set (md5-nibble bit votes). Returns

@@ -688,6 +688,9 @@ object Analytics3 {
       Some {
         val toksSql =
           "list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'), x -> x <> '')"
+        // Every CTE referenced more than once is MATERIALIZED: DuckDB otherwise
+        // inlines each reference, so the plan grows with the product of the
+        // reference counts over the rounds and runs out of memory.
         // bK = ML segmentation of word[0, K): argmax over pieces ending at
         // K of b(K-len)·p, via union of the up-to-4 reachable prior states
         val bk = (k: Int) => {
@@ -697,7 +700,7 @@ object Analytics3 {
                 "0 AS np, '' AS seg FROM wf"
             else s"SELECT w, nw, $j AS e, prob, np, seg FROM b$j"
           }.mkString("\n|    UNION ALL ")
-          s"""b$k AS (
+          s"""b$k AS${if (k < 8) " MATERIALIZED" else ""} (
              |  SELECT c.w, pb.nw, pb.prob * c.pr AS prob,
              |    pb.np + 1 AS np,
              |    CASE WHEN pb.seg = '' THEN c.gram
@@ -714,15 +717,15 @@ object Analytics3 {
           s"SELECT w, nw, $k AS e, prob, np, seg FROM b$k")
           .mkString("\n|  UNION ALL ")
         s"""WITH toks AS (SELECT unnest($toksSql) AS w FROM documents),
-           |wf AS (SELECT w, COUNT(*) AS nw FROM toks GROUP BY 1),
-           |sub AS (
+           |wf AS MATERIALIZED (SELECT w, COUNT(*) AS nw FROM toks GROUP BY 1),
+           |sub AS MATERIALIZED (
            |  SELECT w, nw, pos, len, substring(w, pos + 1, len) AS gram
            |  FROM wf, unnest(range(0, length(w))) p(pos),
            |       unnest(range(1, 5)) l(len)
            |  WHERE pos + len <= length(w)),
-           |grams AS (SELECT gram, CAST(SUM(nw) AS BIGINT) AS cnt
+           |grams AS MATERIALIZED (SELECT gram, CAST(SUM(nw) AS BIGINT) AS cnt
            |          FROM sub GROUP BY 1),
-           |inv AS (
+           |inv AS MATERIALIZED (
            |  SELECT gram, cnt FROM grams WHERE length(gram) > 1
            |  QUALIFY row_number() OVER (ORDER BY cnt DESC, gram) <= 60
            |  UNION ALL
@@ -730,7 +733,7 @@ object Analytics3 {
            |tot AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS tt FROM inv),
            |p AS (SELECT gram, CAST(cnt AS DOUBLE) / tot.tt AS pr
            |      FROM inv, tot),
-           |cand AS (SELECT s.w, s.pos, s.len, s.gram, p.pr
+           |cand AS MATERIALIZED (SELECT s.w, s.pos, s.len, s.gram, p.pr
            |         FROM sub s JOIN p USING (gram)),
            |${(1 to 8).map(bk).mkString(",\n")},
            |fin AS (

@@ -142,6 +142,9 @@ object Analytics6 {
           .orderBy($"qid", $"rank")
       },
       Some {
+        // Every CTE referenced more than once is MATERIALIZED: DuckDB otherwise
+        // inlines each reference, so the plan grows with the product of the
+        // reference counts over the rounds and runs out of memory.
         val rounds = (2 to 5).map { r =>
           s"""sc$r AS (
              |  SELECT c.qid, c.vid, c.rel,
@@ -158,15 +161,15 @@ object Analytics6 {
              |    SELECT qid, vid, score, ROW_NUMBER() OVER (PARTITION BY qid
              |      ORDER BY score DESC, vid) AS rn
              |    FROM sc$r) WHERE rn = 1),
-             |s$r AS (SELECT qid, vid, rank, score FROM s${r - 1}
+             |s$r AS${if (r < 5) " MATERIALIZED" else ""} (SELECT qid, vid, rank, score FROM s${r - 1}
              |        UNION ALL SELECT qid, vid, rank, score FROM p$r)"""
             .stripMargin
         }.mkString(",\n")
-        s"""WITH flat AS (
+        s"""WITH flat AS MATERIALIZED (
            |  SELECT vec_id, unnest(embedding) AS v,
            |         generate_subscripts(embedding, 1) AS pos
            |  FROM embeddings),
-           |norms AS (
+           |norms AS MATERIALIZED (
            |  SELECT vec_id,
            |    sqrt(CAST(SUM(CAST(CAST(v AS DOUBLE) * CAST(v AS DOUBLE)
            |      AS DECIMAL(30,12))) AS DOUBLE)) AS nrm
@@ -181,12 +184,12 @@ object Analytics6 {
            |  JOIN norms nc ON nc.vec_id = c.vec_id
            |  WHERE q.vec_id < 3
            |  GROUP BY q.vec_id, c.vec_id, nq.nrm, nc.nrm),
-           |cands AS (
+           |cands AS MATERIALIZED (
            |  SELECT qid, vid, rel FROM (
            |    SELECT qid, vid, rel, ROW_NUMBER() OVER (PARTITION BY qid
            |      ORDER BY rel DESC, vid) AS rr
            |    FROM rel0) WHERE rr <= 10),
-           |sims AS (
+           |sims AS MATERIALIZED (
            |  SELECT c1.qid, c1.vid AS v1, c2.vid AS v2,
            |    round(CAST(SUM(CAST(CAST(a.v AS DOUBLE) * CAST(b.v AS DOUBLE)
            |      AS DECIMAL(30,12))) AS DOUBLE) /
@@ -198,7 +201,7 @@ object Analytics6 {
            |  JOIN norms n1 ON n1.vec_id = c1.vid
            |  JOIN norms n2 ON n2.vec_id = c2.vid
            |  GROUP BY c1.qid, c1.vid, c2.vid, n1.nrm, n2.nrm),
-           |s1 AS (
+           |s1 AS MATERIALIZED (
            |  SELECT qid, vid, 1 AS rank, 0.7 * rel AS score FROM (
            |    SELECT qid, vid, rel, ROW_NUMBER() OVER (PARTITION BY qid
            |      ORDER BY rel DESC, vid) AS rn

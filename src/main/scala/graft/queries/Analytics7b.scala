@@ -326,6 +326,9 @@ object Analytics7b {
         sup.select($"a", $"b", $"support").orderBy($"a", $"b")
       },
       Some {
+        // Every CTE referenced more than once is MATERIALIZED: DuckDB otherwise
+        // inlines each reference, so the plan grows with the product of the
+        // reference counts over the rounds and runs out of memory.
         val round = (k: Int) =>
           s"""s$k AS (
              |  SELECT e.a, e.b, COUNT(*) AS support
@@ -336,7 +339,7 @@ object Analytics7b {
              |  JOIN e${k - 1} x ON x.a = LEAST(n.u, e.b)
              |                  AND x.b = GREATEST(n.u, e.b)
              |  GROUP BY e.a, e.b HAVING COUNT(*) >= 2),
-             |e$k AS (SELECT a, b FROM s$k)""".stripMargin
+             |e$k AS${if (k < 3) " MATERIALIZED" else ""} (SELECT a, b FROM s$k)""".stripMargin
         s"""WITH e0raw AS (
            |  SELECT c_nationkey AS src, s_nationkey AS dst
            |  FROM lineitem
@@ -345,7 +348,7 @@ object Analytics7b {
            |  JOIN supplier ON l_suppkey = s_suppkey
            |  WHERE c_nationkey <> s_nationkey
            |  GROUP BY 1, 2 HAVING COUNT(*) >= 150),
-           |e0 AS (
+           |e0 AS MATERIALIZED (
            |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst)
            |      AS b
            |  FROM e0raw),
@@ -405,15 +408,16 @@ object Analytics7b {
           .orderBy($"node")
       },
       Some {
+        // e0, edges and d0..d6 are MATERIALIZED (see graph_ktruss).
         val round = (k: Int) =>
-          s"""d$k AS (
+          s"""d$k AS MATERIALIZED (
              |  SELECT s, v, MIN(d) AS d FROM (
              |    SELECT s, v, d FROM d${k - 1}
              |    UNION ALL
              |    SELECT p.s, e.dst AS v, p.d + 1 AS d
              |    FROM d${k - 1} p JOIN edges e ON e.src = p.v)
              |  GROUP BY 1, 2)""".stripMargin
-        s"""WITH e0 AS (
+        s"""WITH e0 AS MATERIALIZED (
            |  SELECT c_nationkey AS src, s_nationkey AS dst
            |  FROM lineitem
            |  JOIN orders ON l_orderkey = o_orderkey
@@ -421,9 +425,9 @@ object Analytics7b {
            |  JOIN supplier ON l_suppkey = s_suppkey
            |  WHERE c_nationkey <> s_nationkey
            |  GROUP BY 1, 2 HAVING COUNT(*) >= 150),
-           |edges AS (SELECT src, dst FROM e0
+           |edges AS MATERIALIZED (SELECT src, dst FROM e0
            |          UNION SELECT dst, src FROM e0),
-           |d0 AS (SELECT DISTINCT src AS s, src AS v, 0 AS d FROM edges),
+           |d0 AS MATERIALIZED (SELECT DISTINCT src AS s, src AS v, 0 AS d FROM edges),
            |${round(1)},
            |${round(2)},
            |${round(3)},

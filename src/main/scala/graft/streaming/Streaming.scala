@@ -291,10 +291,11 @@ object Streaming {
         getHandle.getListState[Long]("pending", Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    /** Sessionize sorted times; emit final sessions, retain + re-arm the rest. */
-    private def flush(key: Long, ts: Array[Long],
-        watermarkMs: Long): Iterator[SessionOut] = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
+    /** Sessionize sorted times; emit final sessions, retain + re-arm the rest.
+      * `expiring` is the timer being handled, which Spark deletes itself. */
+    private def flush(key: Long, ts: Array[Long], watermarkMs: Long,
+        expiring: Option[Long] = None): Iterator[SessionOut] = {
+      getHandle.listTimers().filterNot(expiring.contains).foreach(getHandle.deleteTimer)
       if (ts.isEmpty) { pending.clear(); return Iterator.empty }
       val sessions = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       var start = ts(0); var last = ts(0); var n = 0L
@@ -321,7 +322,7 @@ object Streaming {
     override def handleExpiredTimer(key: Long, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionOut] = {
       flush(key, pending.get().toArray.sorted,
-        timerValues.getCurrentWatermarkInMs())
+        timerValues.getCurrentWatermarkInMs(), Some(expiredTimerInfo.getExpiryTimeInMs()))
     }
   }
 

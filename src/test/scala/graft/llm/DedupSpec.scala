@@ -1,14 +1,21 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.MinHashBands
 
 /** Dedup building blocks. The dfCap test is the scale guard for the
   * incremental-dedup corpus store: boilerplate shingles (appearing in more than
   * τ docs) must be pruned BEFORE any shingle equi-join, or a single hot key
   * fans the join out quadratically at corpus scale. */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -86,5 +93,134 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val sh = Dedup.shingleFrame(docs, "doc_id", "text", 3)
     assert(Dedup.dfCap(sh, tau = 2L).count() == sh.count())
+  }
+
+  /** The sf0.001 tables, from the table in TESTDATA.md. */
+  private lazy val sf001 = {
+    val doc = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("TESTDATA.md")), "UTF-8")
+    """(?m)^\|\s*0\.001\s*\|\s*`([^`]+)`""".r.findFirstMatchIn(doc)
+      .map(_.group(1).stripSuffix("/")).getOrElse(fail("no sf0.001 row in TESTDATA.md"))
+  }
+
+  /** The exploded composition the `minhash-dedup` op ran before the kernel. */
+  private def explodedVictims(docs: DataFrame, numHashes: Int, bandSize: Int,
+      minJaccard: Double): DataFrame = {
+    val sh = Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
+    val cands = Dedup.bandedCandidatesWide(
+      Dedup.minhashWide(sh, "doc_id", numHashes), "doc_id", numHashes, bandSize)
+    Dedup.jaccardFromShingles(cands, sh.withColumnRenamed("doc_id", "jid"))
+      .filter(col("jaccard") >= minJaccard)
+      .select(col("id2").as("doc_id")).distinct()
+  }
+
+  private def ids(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+
+  test("nearDupVictims equals the exploded composition on sf0.001 documents") {
+    val docs = graft.Tables.documents(spark, sf001).select("doc_id", "text")
+    for ((nh, bs, mj) <- Seq((12, 3, 0.8), (12, 3, 0.0), (8, 2, 0.5))) {
+      val got = ids(Dedup.nearDupVictims(docs, "doc_id", "text", nh, bs, mj))
+      val want = ids(explodedVictims(docs, nh, bs, mj))
+      assert(got == want, s"($nh, $bs, $mj)")
+      if (mj == 0.0) assert(want.nonEmpty) // the bands do find candidates here
+    }
+  }
+
+  test("nearDupVictims equals the exploded composition on edge-case documents") {
+    import spark.implicits._
+    // a one-token change to an n-token text leaves n-3 of its n-2 shingles:
+    // Jaccard (n-3)/(n-1) — 9/11 above 0.8, 8/10 exactly at it, 7/9 below
+    def text(p: String, n: Int, last: String) =
+      ((0 until n - 1).map(i => s"$p$i") :+ last).mkString(" ")
+    val docs = Seq[(Long, String)](
+      (1L, null), (2L, ""), (3L, "two words"), (4L, "two words"),
+      (10L, "the same text five times"), (11L, "The same text, five times!"),
+      (20L, text("a", 12, "x")), (21L, text("a", 12, "y")),
+      (30L, text("b", 11, "x")), (31L, text("b", 11, "y")),
+      (40L, text("c", 10, "x").toUpperCase), (41L, text("c", 10, "y")),
+      (50L, "naïve café über straße 東京 タワー größe"),
+      (51L, "Naïve café über straße 東京 タワー größe"),
+      (52L, "naïve café über strasse 東京 タワー größe"))
+      .toDF("doc_id", "text")
+    val got = ids(Dedup.nearDupVictims(docs, "doc_id", "text", 12, 3, 0.8))
+    assert(got == ids(explodedVictims(docs, 12, 3, 0.8)))
+    // copies (case and punctuation fold away) and pairs at or above 0.8 lose
+    // their higher id; short, empty and null texts and the 7/9 pair never pair
+    assert(got == Set(11L, 21L, 31L, 51L), got)
+  }
+
+  test("minhash_bands equals the SQL min-of-affine-md5 formula") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val alphabet = Seq("a", "b", "c", "x", "y", " ", "é", "ß", "東", "京", "😀")
+    val sets = (0 until 300).map { i =>
+      val n = if (i % 17 == 0) 0 else 1 + rnd.nextInt(9)
+      (i.toLong, (0 until n).map(_ =>
+        (0 to rnd.nextInt(6)).map(_ => alphabet(rnd.nextInt(alphabet.size))).mkString))
+    } :+ ((999L, null.asInstanceOf[Seq[String]]))
+    val df = sets.toDF("id", "sh").repartition(3)
+    df.createOrReplaceTempView("mhb_sets")
+    for ((nh, bs) <- Seq((12, 3), (8, 2), (7, 3), (1, 1))) {
+      val nBands = nh / bs
+      val mh = (0 until nh).map(i =>
+        s"min(conv(substring(md5(s), 1, 7), 16, 10) + $i * " +
+          s"conv(substring(md5(s), 8, 7), 16, 10)) AS mh$i").mkString(", ")
+      val sig = (0 until nBands).map { b =>
+        s"$b, concat_ws('|', ${(0 until bs).map(j => s"mh${b * bs + j}").mkString(", ")})"
+      }.mkString(", ")
+      val want = spark.sql(
+        s"""SELECT id, stack($nBands, $sig) AS (band, sig) FROM (
+           |  SELECT id, $mh FROM (SELECT id, explode(sh) AS s FROM mhb_sets)
+           |  GROUP BY id)""".stripMargin)
+      val got = df.select($"id", MinHashBands($"sh", nh, bs))
+      assert(got.schema.map(_.name) == Seq("id", "band", "sig"))
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"($nh, $bs)")
+      assert(got.count() == (sets.count(s => s._2 != null && s._2.nonEmpty) * nBands))
+    }
+  }
+
+  test("minhash-dedup op plan: one signature pass per document, arrays shuffled by id") {
+    // the 100 TB shape: no broadcast, every join is a shuffle join
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val docs = graft.Tables.documents(s, sf001).select("doc_id", "text")
+    docs.createOrReplaceTempView("mhd_docs")
+    val env = Map("INPUT" -> "mhd_docs", "OUTPUT" -> "mhd_out")
+      .map { case (k, v) => k -> graft.spec.EnvValue(v) }
+    graft.exec.Ops.builtins("minhash-dedup")(new graft.exec.JobContext(s, "."), env)
+    def isSig(e: Expression) = e.exists(_.isInstanceOf[MinHashBands])
+    def sigPasses(p: SparkPlan) = collect(p) {
+      case g: GenerateExec if isSig(g.generator) => g
+    }.size
+    def shuffles(p: SparkPlan) = collect(p) { case e: ShuffleExchangeExec => e }
+
+    // Planned (before AQE runs a stage): each of the band self-join's two scan
+    // branches derives the signature once, as the Generate itself
+    val planned = s.table("mhd_out").queryExecution.executedPlan
+    assert(sigPasses(planned) == 2)
+    assert(collect(planned) {
+      case f: FilterExec if isSig(f.condition) => f
+      case p: ProjectExec if p.projectList.exists(isSig) => p
+    }.isEmpty)
+    val parent = docs.join(explodedVictims(docs, 12, 3, 0.8), Seq("doc_id"), "left_anti")
+    val n = shuffles(planned).size
+    val n0 = shuffles(parent.queryExecution.executedPlan).size
+    // 8 and 20 on Spark 4.1: adding a shuffle to the op fails here too
+    assert(n <= 8 && n < n0, s"shuffle exchanges: op $n, exploded composition $n0")
+
+    // Executed: the second band branch and the id2 side of the verification
+    // are reused exchanges, so the signature runs once per document and the
+    // arrays cross two exchanges — the (id, array) frame and the id1-joined
+    // candidates — each keyed by one document id
+    val done = s.table("mhd_out")
+    done.collect()
+    val ran = done.queryExecution.executedPlan
+    assert(sigPasses(ran) == 1)
+    val arrayShuffles =
+      shuffles(ran).filter(_.output.exists(_.dataType.isInstanceOf[ArrayType]))
+    assert(arrayShuffles.size == 2 && arrayShuffles.forall(_.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.size == 1
+      case _ => false
+    }), arrayShuffles)
   }
 }
