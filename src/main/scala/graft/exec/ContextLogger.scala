@@ -139,9 +139,6 @@ final class ContextLogger(sink: String => Unit, style: String = "gaudy",
 
   /** Ordinary line inside the current context. */
   def line(msg: String): Unit = info(msg)
-
-  /** The runner's `String => Unit` surface. */
-  def asSink: String => Unit = line
 }
 
 object ContextLogger {

@@ -6,7 +6,7 @@ import graft.spec.{EnvValue, SpecError}
 
 /** Mutable per-job state: named DataFrame handoff (the engine's analogue of the
   * reference's file-based data plane — results are temp views instead of files on
-  * disk, parquet checkpoints when a command asks for one). */
+  * disk; only the write ops put data on disk). */
 final class JobContext(val spark: SparkSession, val dataDir: String,
     val log: String => Unit = println) {
   def view(name: String): DataFrame =
@@ -126,19 +126,22 @@ object Ops {
       graft.llm.Dedup.keepFirst(ctx.view(str(env, "INPUT")), keys, order)
         .createOrReplaceTempView(str(env, "OUTPUT"))
     },
-    // Near-dup collapse: drop the victims of graft.llm.Dedup.nearDupVictims — one
-    // shingle array and one (band, sig) signature pass per document, a band
-    // self-join for candidates, exact Jaccard from the two arrays — so the lowest
-    // id of each near-dup pair survives (deterministic: hashes, banding and the
-    // threshold are all reproducible).
+    // Near-dup collapse with graft.llm.Dedup's kernel — one shingle array and one
+    // (band, sig) signature pass per document, a band self-join for candidates,
+    // exact Jaccard from the two arrays — then drop the id2 of every pair at or
+    // above the threshold, so the lowest id of each near-dup pair survives
+    // (deterministic: hashes, banding and the threshold are all reproducible).
     "minhash-dedup" -> { (ctx, env) =>
+      import graft.llm.Dedup
       val idCol = opt(env, "ID_COL").getOrElse("doc_id")
       val docs = ctx.view(str(env, "INPUT"))
-      val victims = graft.llm.Dedup.nearDupVictims(docs, idCol,
-        textCol = opt(env, "TEXT_COL").getOrElse("text"),
+      val sets = Dedup.shingleSets(docs, idCol, opt(env, "TEXT_COL").getOrElse("text"))
+      val cands = Dedup.lshCandidates(sets, idCol,
         numHashes = opt(env, "NUM_HASHES").map(_.toInt).getOrElse(12),
-        bandSize = opt(env, "BAND_SIZE").map(_.toInt).getOrElse(3),
-        minJaccard = opt(env, "MIN_JACCARD").map(_.toDouble).getOrElse(0.8))
+        bandSize = opt(env, "BAND_SIZE").map(_.toInt).getOrElse(3))
+      val victims = Dedup.pairJaccard(cands, sets, idCol)
+        .filter(col("jaccard") >= opt(env, "MIN_JACCARD").map(_.toDouble).getOrElse(0.8))
+        .select(col("id2").as(idCol)).distinct()
       docs.join(victims, Seq(idCol), "left_anti")
         .createOrReplaceTempView(str(env, "OUTPUT"))
     },

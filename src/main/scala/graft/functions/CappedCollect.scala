@@ -18,12 +18,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * group, then stops — aggregation state is O(limit) per group no matter how
   * hot the key is.
   *
-  * Built for the LSH df-cap (Dedup.bandedCandidatesWide): a bucket is kept
-  * only if it has ≤ cap members, so collecting `cap + 1` elements is enough to
-  * decide keep-vs-drop AND, for every kept bucket, the array is provably the
-  * complete member set (truncation can only have happened on dropped buckets).
-  * That folds the old size-aggregate + semi-join back-join into the single
-  * groupBy that forms the buckets — one shuffle instead of three.
+  * Built for the LSH df-cap (`maxBucket` of Dedup.lshCandidates): a band bucket
+  * is kept only if it has ≤ cap members, so collecting `cap + 1` elements is
+  * enough to decide keep-vs-drop AND, for every kept bucket, the array is
+  * provably the complete member set (truncation can only have happened on
+  * dropped buckets). Deciding in the single groupBy that forms the buckets
+  * takes one shuffle, where a size aggregate plus a semi-join back onto the
+  * bucket rows takes three.
   *
   * WHICH elements survive truncation depends on partial-merge order and is
   * not deterministic — callers must only use the array when its size is

@@ -15,19 +15,20 @@ import org.apache.spark.unsafe.types.UTF8String
 /** MinHash-LSH band signatures of one shingle set, as a table function: emits one
   * `(band, sig)` row per band from a document's shingle array, in one pass over it.
   *
-  * The hash family is the one [[graft.llm.Dedup.minhashWide]] computes with
-  * exploded rows and a groupBy: ONE md5 per shingle (over its UTF-8 bytes), h1 =
-  * hex nibbles 1–7 and h2 = nibbles 8–14 of the digest (28 bits each), and
-  * `mh_i = min(h1 + i·h2)` for `i < numHashes`. Band `b` renders hashes
-  * `b·bandSize ..` of it as decimal strings joined by `'|'`, exactly as
-  * `concat_ws('|', …)` in [[graft.llm.Dedup.bandedCandidatesWide]] does, so the
-  * rows are bit-identical to that composition's `(band, sig)` rows. Hashes past
-  * the last whole band are not computed (they never reach a band there either).
+  * Hash family (the classic 2-universal affine construction): ONE md5 per
+  * shingle, over its UTF-8 bytes; h1 = hex nibbles 1–7 and h2 = nibbles 8–14 of
+  * the digest (28 bits each); hash i is `h1 + i·h2`, and `mh_i` is its minimum
+  * over the set, for `i < numHashes`. Values stay < 2^28·(numHashes+1), so the
+  * same integers come out of the SQL
+  * `min(conv(substring(md5(s), 1, 7), 16, 10) + i * conv(substring(md5(s), 8, 7), 16, 10))`
+  * over exploded shingle rows, and out of the DuckDB oracles (positional nibble
+  * sums, see queries.QueryDSL.sqlHexInt). Band `b`'s `sig` is hashes
+  * `b·bandSize .. (b+1)·bandSize − 1` as decimal strings joined by `'|'` — the
+  * separator keeps variable-width integers from aliasing ("1"+"23" vs "12"+"3").
+  * Hashes past the last whole band are not computed.
   *
-  * A null or empty array emits no rows — such a document has no signature row in
-  * the exploded composition either. Null elements are skipped, as `min` skips
-  * their null md5 (an array of nulls alone, which a token array's shingles never
-  * are, emits nothing here but an all-null signature there).
+  * A null or empty array emits no rows. Null elements are skipped, and an array
+  * of nulls alone emits nothing.
   *
   * Deterministic, so Catalyst treats it like any generator: the Generate node
   * produces fresh `band`/`sig` attributes, and a predicate on them (the join's

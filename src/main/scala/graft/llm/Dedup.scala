@@ -7,10 +7,12 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for LLM data pipelines (SURVEY.md §2b "LLM extensions"):
   * exact (keyed keep-first, content-hash collapse), MinHash+LSH near-dup, n-gram
   * Jaccard, SimHash. All pure DataFrame pipelines — every stage is a shuffle on an
-  * explicit key (doc id, salt, band signature, shingle), so the work scales out
-  * horizontally; nothing is collected to the driver. The MinHash banding join is the
-  * 100 TB path: candidates come from equal band-signature buckets, never from a
-  * pairwise cross join. */
+  * explicit key (doc id, band signature, shingle), so the work scales out
+  * horizontally; nothing is collected to the driver. Near-dup detection composes
+  * three pieces: [[shingleSets]] (one shingle array per document) →
+  * [[lshCandidates]] (MinHash-LSH band buckets) → [[pairJaccard]] (exact
+  * verification). The band join is the 100 TB path: candidates come from equal
+  * band-signature buckets, never from a pairwise cross join. */
 object Dedup {
 
   /** Deterministic keep-first exact dedup: first row per key under `order`. The batch
@@ -35,102 +37,63 @@ object Dedup {
       "left_semi")
   }
 
-  /** The exploded (id, shingle) frame — the shared input of signature computation and
-    * Jaccard verification in the exploded composition ([[minhashWide]] →
-    * [[bandedCandidatesWide]] → [[jaccardFromShingles]]), which the corpus dedup
-    * queries and their oracle SQL mirror. Near-dup removal over a document frame
-    * is [[nearDupVictims]], which keeps each shingle set as one array per
-    * document instead of a row per shingle. */
-  def shingleFrame(docs: DataFrame, id: String, textCol: String,
-      shingleN: Int): DataFrame =
+  /** Each document's distinct word 3-shingle set as one array: `(id, shingles)`.
+    * Documents whose set is null or empty (null text, under 3 tokens) are dropped:
+    * they have no shingle to sign or share, and an empty pair would divide 0/0 in
+    * [[pairJaccard]]. */
+  def shingleSets(docs: DataFrame, id: String, textCol: String): DataFrame =
     docs
       // stage the token array as a real column: higher-order-function lambdas
       // re-evaluate free subexpressions per invocation, so tokenizing inline would
       // re-run the regex split once per shingle position
       .select(col(id), TextFunctions.tokens(col(textCol)).as("__tk"))
-      .select(col(id),
-        explode(array_distinct(TextFunctions.ngrams(col("__tk"), shingleN)))
-          .as("shingle"))
+      // the set comes out of a one-row explode (no row for a set-less document)
+      // rather than a Project + Filter: Catalyst pushes a filter below a Project
+      // by inlining the aliased expression, which would re-run the tokenizer or
+      // the n-gram lambda in the filter, but never below a generator's output
+      .select(col(id), explode(when(size(col("__tk")) >= 3,
+        array(array_distinct(TextFunctions.ngrams(col("__tk"), 3))))).as("shingles"))
 
-  /** MinHash signatures: one row per (id, salt) with the min salted-md5 over the
-    * document's shingle set. `numHashes` salted hashes simulate independent
-    * permutations; min over lexicographic hex is consistent across engines. */
-  def minhashSignatures(docs: DataFrame, id: String, textCol: String,
-      numHashes: Int, shingleN: Int): DataFrame =
-    minhashFromShingles(shingleFrame(docs, id, textCol, shingleN), id, numHashes)
+  /** The exploded `(id, shingle)` frame: one row per distinct shingle of each
+    * document, for shingle-keyed joins and document-frequency counts. */
+  def shingleFrame(docs: DataFrame, id: String, textCol: String): DataFrame =
+    shingleSets(docs, id, textCol).select(col(id), explode(col("shingles")).as("shingle"))
 
-  /** One pass over the shingles: all `numHashes` salted minima as parallel aggregates
-    * (map-side partial agg, no salt cross-join — 1/numHashes-th the shuffle volume).
-    * Returns the wide signature frame (id, mh0..mh{n-1}) — one shuffle total.
+  /** MinHash-LSH candidate pairs `(id1, id2)`, `id1 < id2`, over a [[shingleSets]]
+    * frame: [[graft.functions.MinHashBands]] emits each document's `(band, sig)`
+    * rows in one pass over its array, and two documents are candidates when they
+    * share a bucket — an equal signature in the same band. Rows carry no array.
     *
-    * Hash family: ONE md5 per shingle, split into two 28-bit halves (h1, h2); hash i
-    * is the affine combination h1 + i·h2 (the classic 2-universal construction).
-    * That replaces numHashes md5 evaluations per row with one digest plus numHashes
-    * integer multiply-adds, and the shuffle partials carry BIGINTs instead of
-    * 32-char hex strings. Values stay < 2^28·(numHashes+1) — no overflow under
-    * ANSI long arithmetic, and the identical expression is portable to the DuckDB
-    * oracle (positional nibble sums, see queries.QueryDSL.sqlHexInt). */
-  def minhashWide(sh: DataFrame, id: String, numHashes: Int): DataFrame = {
-    val h = md5(col("shingle"))
-    val h1 = conv(substring(h, 1, 7), 16, 10).cast("long")
-    val h2 = conv(substring(h, 8, 7), 16, 10).cast("long")
-    val aggs = (0 until numHashes).map(i =>
-      min(h1 + lit(i.toLong) * h2).as(s"mh$i"))
-    sh.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Long-form (id, salt, minhash) view of [[minhashWide]] — shuffle-free unpivot. */
-  def minhashFromShingles(sh: DataFrame, id: String, numHashes: Int): DataFrame = {
-    val stackExpr = (0 until numHashes).map(s => s"$s, mh$s").mkString(", ")
-    minhashWide(sh, id, numHashes).select(col(id),
-      expr(s"stack($numHashes, $stackExpr) as (salt, minhash)"))
-  }
-
-  /** Candidate pairs from the wide signature frame: band signatures are a pure
-    * projection (stack of concats — no extra shuffle), then an equi-join on
-    * (band, sig) buckets. Total: explode-free, sort-free, 2 shuffles (join+distinct).
+    * `maxBucket` (the LSH df-cap, mirroring the shingle-edge [[dfCap]]): a bucket
+    * holding k members emits C(k,2) pairs, so a degenerate signature — boilerplate
+    * text, or a dup-heavy crawl where one document has thousands of near-copies —
+    * makes candidate volume quadratic in the hot-bucket size (measured on the 10×
+    * clone-scaled probe: max bucket 15→150, pairs 13.5k→1.54M ≈ ×114). With a cap,
+    * buckets over `maxBucket` members are dropped whole: their pairs are either
+    * exact dups (found by hash-collapse dedup first) or re-surface in another of
+    * the nBands independent bands, and candidate volume is bounded by
+    * nBands·maxBucket·|docs|/2 — linear in the corpus.
     *
-    * `maxBucket` (the LSH df-cap, mirroring the shingle-edge df-cap above;
-    * VERDICT r12 ask #1): a bucket holding k members emits C(k,2) pairs, so a
-    * degenerate signature — boilerplate text, near-constant columns, or a
-    * dup-heavy crawl where one document has thousands of near-copies — makes
-    * candidate volume quadratic in the hot-bucket size (measured on the 10×
-    * clone-scaled probe: max bucket 15→150, pairs 13.5k→1.54M ≈ ×114). With a
-    * cap, buckets over `maxBucket` members are dropped whole: their pairs are
-    * either exact dups (found by hash-collapse dedup first) or re-surface in
-    * another of the nBands independent bands, and candidate volume is bounded
-    * by nBands·maxBucket·|docs|/2 — linear in the corpus.
-    *
-    * The capped path is FUSED (round 14, VERDICT r13 ask #2): the single
-    * groupBy that forms the buckets also decides keep-vs-drop, via
-    * [[graft.functions.CappedCollect]] — collect at most cap+1 member ids per
-    * bucket (O(cap) aggregation state even on a million-member degenerate
-    * bucket), keep buckets whose array has 2..cap members (≤ cap ⇒ the array
-    * is provably the complete member set), and emit the C(k,2) ≤ C(cap,2)
-    * pairs map-side from the sorted array. One bucket shuffle + one distinct
-    * — the old size-aggregate + semi-join + self-join (3 shuffles over the
-    * banded frame) is gone. None = exact LSH via the self-join (bucket sizes
+    * The capped path is fused: the single groupBy that forms the buckets also
+    * decides keep-vs-drop, via [[graft.functions.CappedCollect]] — collect at most
+    * cap+1 member ids per bucket (O(cap) aggregation state even on a
+    * million-member degenerate bucket), keep buckets whose array has 2..cap
+    * members (≤ cap ⇒ the array is provably the complete member set), and emit the
+    * C(k,2) ≤ C(cap,2) pairs map-side from the sorted array. One bucket shuffle +
+    * one distinct. None = exact LSH via the `(band, sig)` self-join (bucket sizes
     * unbounded, so pairs must come from the join, not an array).
     *
     * Requires a bigint id for the capped path (all graft doc ids are). */
-  def bandedCandidatesWide(wide: DataFrame, id: String, numHashes: Int,
-      bandSize: Int, maxBucket: Option[Int] = None): DataFrame = {
-    val nBands = numHashes / bandSize
-    // '|' separator: integer minhashes render variable-width, so a bare concat
-    // would alias ("1"+"23" == "12"+"3") and over-merge buckets
-    val sigExpr = (0 until nBands).map { b =>
-      val c = (0 until bandSize).map(s => s"mh${b * bandSize + s}").mkString(", ")
-      s"$b, concat_ws('|', $c)"
-    }.mkString(", ")
-    val banded0 = wide.select(col(id),
-      expr(s"stack($nBands, $sigExpr) as (band, sig)"))
+  def lshCandidates(sets: DataFrame, id: String, numHashes: Int, bandSize: Int,
+      maxBucket: Option[Int] = None): DataFrame = {
+    val bands = sets.select(col(id),
+      graft.functions.MinHashBands(col("shingles"), numHashes, bandSize))
     maxBucket match {
       case Some(cap) =>
-        require(wide.schema(id).dataType ==
-          org.apache.spark.sql.types.LongType,
+        require(sets.schema(id).dataType == org.apache.spark.sql.types.LongType,
           s"maxBucket path requires a bigint id column, got " +
-            wide.schema(id).dataType.simpleString)
-        banded0.groupBy(col("band"), col("sig"))
+            sets.schema(id).dataType.simpleString)
+        bands.groupBy(col("band"), col("sig"))
           .agg(graft.functions.CappedCollect.long(col(id), cap + 1).as("ms"))
           .filter(size(col("ms")).between(2, cap))
           // sorted ascending ⇒ positional (i < j) expansion yields id1 < id2
@@ -142,96 +105,36 @@ object Dedup {
           .filter(col("id1") < col("id2"))
           .distinct()
       case None =>
-        val a = banded0.select(col(id).as("id1"), col("band"), col("sig"))
-        val b = banded0.select(col(id).as("id2"), col("band"), col("sig"))
-        a.join(b, Seq("band", "sig"))
+        bands.select(col(id).as("id1"), col("band"), col("sig"))
+          .join(bands.select(col(id).as("id2"), col("band"), col("sig")),
+            Seq("band", "sig"))
           .filter(col("id1") < col("id2"))
           .select("id1", "id2").distinct()
     }
   }
 
-  /** Band the signatures (`bandSize` hashes per band) and emit candidate pairs from
-    * equal (band, signature) buckets — the LSH join. */
-  def bandedCandidates(sigs: DataFrame, id: String, bandSize: Int): DataFrame = {
-    val banded = sigs
-      .withColumn("band", floor(col("salt") / bandSize).cast("int"))
-      .groupBy(col(id), col("band"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("salt"), col("minhash")))),
-          x => x.getField("minhash").cast("string")), "|").as("sig"))
-    val a = banded.select(col(id).as("id1"), col("band"), col("sig"))
-    val b = banded.select(col(id).as("id2"), col("band"), col("sig"))
-    a.join(b, Seq("band", "sig"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-  }
-
-  /** Jaccard for candidate pairs: |A∩B| via join on shingle, |A∪B| = |A|+|B|−|A∩B|.
-    * Computed via shingle-key joins (distributed), never by materializing pairwise
-    * set intersections on the driver. */
-  def jaccardPairs(candidates: DataFrame, docs: DataFrame, id: String,
-      textCol: String, shingleN: Int): DataFrame =
-    jaccardFromShingles(candidates,
-      shingleFrame(docs, id, textCol, shingleN).withColumnRenamed(id, "jid"))
-
-  /** As [[jaccardPairs]] but over a precomputed (jid, shingle) frame. */
-  def jaccardFromShingles(candidates: DataFrame, sh: DataFrame): DataFrame = {
-    // Scale note (round 15): callers with a MATERIALIZED candidate frame
-    // should pre-prune `sh` to the candidate id set with a broadcast
-    // semi-join before calling (see dedup_minhash_lsh) — verification then
-    // shuffles ∝ |candidates|, not |corpus|. The pruning is NOT done here
-    // because building the id broadcast from a lazy `candidates` plan makes
-    // the broadcast thread race the main stages through the whole candidate
-    // pipeline (measured: ~2× wall on dedup_minhash_lsh when cand was lazy).
-    val sizes = sh.groupBy("jid").agg(count(lit(1)).as("sz"))
-    val inter = candidates
-      .join(sh.select(col("jid").as("id1"), col("shingle")), Seq("id1"))
-      .join(sh.select(col("jid").as("id2"), col("shingle")), Seq("id2", "shingle"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("n_shared"))
-    candidates
-      .join(inter, Seq("id1", "id2"), "left")
-      .na.fill(0L, Seq("n_shared"))
-      .join(sizes.select(col("jid").as("id1"), col("sz").as("sz1")), Seq("id1"))
-      .join(sizes.select(col("jid").as("id2"), col("sz").as("sz2")), Seq("id2"))
+  /** Exact shingle Jaccard of every `(id1, id2, …)` row of `pairs`: joins the
+    * [[shingleSets]] frame on `id1` and on `id2` and adds the bigints
+    * `n_shared = |s1 ∩ s2|`, `sz1 = |s1|`, `sz2 = |s2|` and the double
+    * `jaccard = n_shared / (sz1 + sz2 − n_shared)`. A pair whose document has no
+    * set is dropped. Arrays cross an exchange only here, keyed by a document id.
+    *
+    * Callers holding a materialized pair frame should first prune `sets` to the
+    * pairs' ids with a broadcast semi-join (see dedup_minhash_lsh): verification
+    * then shuffles ∝ |pairs|, not |corpus|. Pruning is not done here because a
+    * broadcast built from a lazy `pairs` plan makes the broadcast thread race the
+    * main stages through the whole candidate pipeline (measured ~2× wall). */
+  def pairJaccard(pairs: DataFrame, sets: DataFrame, id: String): DataFrame = {
+    val n = size(array_intersect(col("__s1"), col("__s2"))).cast("long")
+    pairs
+      .join(sets.select(col(id).as("id1"), col("shingles").as("__s1")), Seq("id1"))
+      .join(sets.select(col(id).as("id2"), col("shingles").as("__s2")), Seq("id2"))
+      .withColumn("n_shared", n)
+      .withColumn("sz1", size(col("__s1")).cast("long"))
+      .withColumn("sz2", size(col("__s2")).cast("long"))
+      .drop("__s1", "__s2")
       .withColumn("jaccard",
         col("n_shared").cast("double") / (col("sz1") + col("sz2") - col("n_shared")))
-  }
-
-  /** Near-duplicate victims by MinHash-LSH over word 3-shingles: the ids `id2` of
-    * every candidate pair `id1 < id2` whose exact shingle Jaccard is at least
-    * `minJaccard`, so anti-joining them keeps the lowest id of each near-dup pair.
-    * Same victims as [[minhashWide]] → [[bandedCandidatesWide]] →
-    * [[jaccardFromShingles]] over [[shingleFrame]] (ids must be unique), without a
-    * row per shingle:
-    *  1. each document's distinct shingle set is one array, staged with the
-    *     expressions of [[shingleFrame]];
-    *  2. [[graft.functions.MinHashBands]] emits its `(band, sig)` rows in one pass
-    *     over that array (bit-identical to the wide signature's bands);
-    *  3. candidates are a self-join on `(band, sig)` of rows that carry no
-    *     array, then `distinct`;
-    *  4. each candidate joins the `(id, array)` frame on `id1` and on `id2`, and
-    *     `n = |s1 ∩ s2|`, `jaccard = n / (|s1| + |s2| − n)` are the integers and
-    *     the division of [[jaccardFromShingles]].
-    * Arrays cross an exchange only in step 4, keyed by a document id; band
-    * buckets are joined, never collected into a row. */
-  def nearDupVictims(docs: DataFrame, id: String, textCol: String, numHashes: Int,
-      bandSize: Int, minJaccard: Double): DataFrame = {
-    val sets = docs
-      .select(col(id), TextFunctions.tokens(col(textCol)).as("__tk"))
-      .select(col(id), array_distinct(TextFunctions.ngrams(col("__tk"), 3)).as("__sh"))
-    val bands = sets.select(col(id),
-      graft.functions.MinHashBands(col("__sh"), numHashes, bandSize))
-    val cands = bands.select(col(id).as("id1"), col("band"), col("sig"))
-      .join(bands.select(col(id).as("id2"), col("band"), col("sig")), Seq("band", "sig"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val n = size(array_intersect(col("s1"), col("s2"))).cast("long")
-    val union = size(col("s1")).cast("long") + size(col("s2")).cast("long") - n
-    cands
-      .join(sets.select(col(id).as("id1"), col("__sh").as("s1")), Seq("id1"))
-      .join(sets.select(col(id).as("id2"), col("__sh").as("s2")), Seq("id2"))
-      .filter(n.cast("double") / union >= minJaccard)
-      .select(col("id2").as(id)).distinct()
   }
 
   /** 16-bit SimHash over the distinct token set (md5-nibble bit votes). Returns

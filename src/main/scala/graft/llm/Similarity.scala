@@ -35,9 +35,6 @@ object Similarity {
 
   def normExact(a: Column): Column = sqrt(dotExact(a, a))
 
-  def cosineExact(a: Column, b: Column): Column =
-    dotExact(a, b) / (normExact(a) * normExact(b))
-
   /** Brute-force cosine top-k: every query row against every corpus row, windowed
     * pick of the k best. Exact — the correctness baseline for ANN variants.
     *

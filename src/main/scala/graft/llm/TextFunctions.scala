@@ -33,13 +33,6 @@ object TextFunctions {
           else Seq(lit(" "), element_at(toks, i + j + 1))): _*)))
       .otherwise(array())
 
-  /** Distinct word n-gram shingle set — the MinHash input. PERF: only use on a
-    * STAGED token column context (see Dedup.shingleFrame); applied straight to a text
-    * column, the tokenizer regex re-evaluates inside the ngrams transform lambda per
-    * element_at (HOFs block Catalyst subexpression elimination) — ~3×shingle-count
-    * regex splits per document. */
-  def shingles(text: Column, n: Int): Column = array_distinct(ngrams(tokens(text), n))
-
   // Tiny per-language stopword inventories for the language-ID heuristic.
   val stopwordsEn = Seq("the", "a", "of", "and", "to", "in", "is", "that")
   val stopwordsFr = Seq("le", "la", "les", "de", "et", "un", "une", "est")

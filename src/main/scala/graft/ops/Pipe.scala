@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -32,11 +32,4 @@ object Pipe {
     * exit. Codes >1 still propagate as task failures (R11 error parity). */
   def shellTolerant(cmd: String): Seq[String] =
     Seq("sh", "-c", s"$cmd; ec=$$?; [ $$ec -le 1 ] || exit $$ec")
-
-  /** Raw line pipe: Dataset[String] through `cmd`. */
-  def pipeLines(ds: Dataset[String], cmd: Seq[String]): Dataset[String] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    spark.createDataset(ds.rdd.pipe(cmd))
-  }
 }

@@ -204,7 +204,7 @@ object Analytics11 {
       (s, dir) => {
         import s.implicits._
         val docs = t(s, dir, "documents").filter($"doc_id" < 300)
-        val sh = graft.llm.Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
+        val sh = graft.llm.Dedup.shingleFrame(docs, "doc_id", "text")
           .localCheckpoint()
         val capped = sh.groupBy($"shingle").agg(count(lit(1)).as("df"))
           .filter($"df".between(2, 50)).select("shingle")

@@ -717,7 +717,7 @@ object Analytics4 {
               |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // b-bit minhash operating-curve audit (Li & König 2010, public): keep
-    // only the LOW BIT of each of 16 salted minhashes (signatures shrink 64x
+    // only the LOW BIT of each of 16 minhashes (signatures shrink 64x
     // vs 64-bit values; Jaccard recovers from the bit-match fraction m as
     // 2m-1), then report the screen's precision per match threshold against
     // exact shingle Jaccard computed ONLY for screened candidates — the
@@ -725,8 +725,8 @@ object Analytics4 {
     // on this 31-token corpus the bit votes are heavily correlated, so only
     // the all-16-match bucket isolates the true near-dups; the curve shows
     // exactly that (the classic small-b/small-vocabulary failure mode the
-    // audit exists to expose). Bounded probe set (doc_id < 300); pairs form
-    // via an equi-join on salt position, never a cross.
+    // audit exists to expose). Bounded probe set (doc_id < 300); pairs come
+    // from one fold over the collected 300-row signature array.
     Q("dedup_minhash_bbit",
       (s, dir) => {
         import s.implicits._
@@ -738,9 +738,8 @@ object Analytics4 {
         // downstream plans 32-task stages whose per-task constant dwarfs the
         // 300-doc payload; the 1-partition cache is the cheaper shape for
         // this bounded subset.
-        val sh = Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
+        val sets = Dedup.shingleSets(docs, "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val wide = Dedup.minhashWide(sh, "doc_id", numHashes = 16)
         // Round 16 (guide §2.4; the r15 "needs an equivalence proof" item):
         // the old candidate pass exploded to (doc, salt, bit) and SELF-JOINED
         // on the 16-value salt key — ≤16 effective tasks, 16·C(300,2) ≈ 717k
@@ -754,10 +753,13 @@ object Analytics4 {
         // produced every a.doc_id < b.doc_id pair (both sides carry all 16
         // salts for every doc — posexplode of a 16-array), and the fold
         // enumerates the same id1 < id2 pair set; the ≥12 filter and the
-        // BIGINT n_match type are unchanged.
-        val packed = wide.select($"doc_id",
-          (0 until 16).map(i =>
-            (col(s"mh$i") % 2).cast("int") * lit(1 << i))
+        // BIGINT n_match type are unchanged. The 16 minima come from ONE
+        // 16-wide band of the signature generator: its `sig` is mh0|…|mh15.
+        val packed = sets
+          .select($"doc_id", graft.functions.MinHashBands($"shingles", 16, 16))
+          .select($"doc_id", split($"sig", "\\|").as("mh"))
+          .select($"doc_id", (0 until 16).map(i =>
+            ($"mh".getItem(i).cast("long") % 2).cast("int") * lit(1 << i))
             .reduce(_ + _).as("sig"))
         val cand = packed
           .agg(collect_list(struct($"doc_id", $"sig")).as("ds"))
@@ -770,15 +772,10 @@ object Analytics4 {
               |        AS n_match))))""".stripMargin)).as("c"))
           .select($"c.id1".as("id1"), $"c.id2".as("id2"),
             $"c.n_match".as("n_match"))
-          // the screen feeds TWO consumers (the Jaccard pair stream and the
-          // join-back) — materialize the tiny pair set once (the lsh idiom)
-          .localCheckpoint(true)
-        val scored = Dedup.jaccardFromShingles(cand.select($"id1", $"id2"),
-            sh.withColumnRenamed("doc_id", "jid"))
-          .join(cand, Seq("id1", "id2"))
+        val scored = Dedup.pairJaccard(cand, sets, "doc_id")
           .select($"n_match", $"jaccard")
           .localCheckpoint(true)
-        sh.unpersist()
+        sets.unpersist()
         scored
           .select(explode(array((12 to 16).map(lit): _*)).as("threshold"),
             $"n_match", $"jaccard")

@@ -82,43 +82,26 @@ object Llm {
              |  GROUP BY sha256(text))
              |ORDER BY canonical_id""".stripMargin)),
 
-    // Full MinHash+LSH pipeline: shingle → 8 salted minhashes → 4 bands × 2 → bucket
+    // Full MinHash+LSH pipeline: shingle sets → 8 minhashes → 4 bands × 2 → bucket
     // join for candidates → exact Jaccard verification on candidates only.
     Q("dedup_minhash_lsh",
       (s, dir) => {
         import s.implicits._
         // Round-15 partition sizing (VERDICT r14 ask #3): a persisted frame's
         // partitioning is pinned at first materialization and sits OUTSIDE
-        // AQE-coalesce reach (cached plans compile with AQE re-planning off),
-        // so both cached frames get explicit, conf-independent sizing:
-        //  - docs arrive as ONE parquet split at sf0.1, so the shingle cache
-        //    fill and every cached read of it (signature agg map side, the
-        //    two Jaccard join map sides) ran as 1-task stages — ~6 s of
-        //    serialized single-thread work at ANY shuffle setting. A cheap
-        //    60k-row round-robin repartition to defaultParallelism before the
-        //    explode makes fill + all reads core-parallel. On a cluster
-        //    defaultParallelism = total executor cores, exactly the floor you
-        //    want for a cached hot frame.
-        //  - `wide` (one row per doc) materialized through its groupBy at
-        //    spark.sql.shuffle.partitions — 200 near-empty cached partitions
-        //    under the cluster-default setting, and every downstream read ran
-        //    200 tasks. coalesce to defaultParallelism pins the cached
-        //    partition count to cores, independent of the shuffle conf.
+        // AQE-coalesce reach (cached plans compile with AQE re-planning off).
+        // Docs arrive as ONE parquet split at sf0.1, so the shingle cache fill
+        // and every cached read of it ran as 1-task stages; a cheap round-robin
+        // repartition to defaultParallelism before the shingling makes fill and
+        // all reads core-parallel. On a cluster defaultParallelism = total
+        // executor cores, exactly the floor you want for a cached hot frame.
         val para = s.sparkContext.defaultParallelism
         val docs = t(s, dir, "documents").repartition(para)
-        // persist the shingle frame once for its two consumers (signatures +
+        // persist the shingle sets once for their two consumers (signatures +
         // verification): MEMORY_AND_DISK spills instead of OOMing, so the same plan
-        // holds on a cluster (at 100 TB each executor caches only its partitions;
-        // a parquet checkpoint would pay a full extra write+read of the largest
-        // intermediate). The signature aggregation below is the first consumer and
-        // fills the cache — an eager count() here would cost one extra full pass.
-        val sh = Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // persist the signature frame as well: the banded candidate generation is a
-        // self-join, and without a materialized input both join sides re-run the
-        // minhash aggregation (one row per doc — tiny at any scale)
-        val wide = Dedup.minhashWide(sh, "doc_id", numHashes = 8)
-          .coalesce(para)
+        // holds on a cluster (at 100 TB each executor caches only its partitions).
+        // The candidate pass below is the first consumer and fills the cache.
+        val sets = Dedup.shingleSets(docs, "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // maxBucket=32 — the LSH df-cap IS the production path at scale
         // (VERDICT r12 ask #1, r13 sf1 probe): a dup-heavy corpus makes
@@ -130,34 +113,32 @@ object Llm {
         // bucket (15 at sf0.1), so sub-cap corpora are bit-identical to
         // uncapped; the oracle mirrors the cap so the hash check stays exact
         // at every scale.
-        val cand = Dedup.bandedCandidatesWide(wide, "doc_id", numHashes = 8,
+        val cand = Dedup.lshCandidates(sets, "doc_id", numHashes = 8,
             bandSize = 2, maxBucket = Some(32))
           // materialize the (tiny, df-capped) pair set once: it feeds the
           // verification pair stream AND the id-set broadcast below — lazy,
           // the broadcast thread would race the main stages through the whole
           // banded pipeline (measured ~2× wall)
           .localCheckpoint(true)
-        // Verification reads only CANDIDATE docs' shingles (round 15, VERDICT
-        // r14 ask #3): prune the 30M-row shingle frame to the ~2|cand| ids
-        // with a broadcast semi-join before jaccardFromShingles' two by-key
-        // shuffles. Verification shuffle volume becomes ∝ |candidates|
-        // (df-cap-bounded), not ∝ |corpus| — the 100 TB requirement — and at
-        // small SF it removes the near-empty-block overhead under the
-        // cluster-default 200 shuffle partitions.
-        val candIds = cand.select($"id1".as("jid"))
-          .union(cand.select($"id2".as("jid"))).distinct()
-        val shPruned = sh.withColumnRenamed("doc_id", "jid")
-          .join(broadcast(candIds), Seq("jid"), "left_semi")
-        // materialize the (tiny) final result eagerly, then release both caches —
-        // Verify/Bench share one session across all queries, so leaving the shingle
-        // frame cached would squeeze execution memory for everything after
-        val res = Dedup.jaccardFromShingles(cand, shPruned)
+        // Verification reads only CANDIDATE docs' sets (round 15, VERDICT r14
+        // ask #3): prune the sets to the ~2|cand| ids with a broadcast
+        // semi-join before pairJaccard's two by-key shuffles. Verification
+        // shuffle volume becomes ∝ |candidates| (df-cap-bounded), not
+        // ∝ |corpus| — the 100 TB requirement — and at small SF it removes the
+        // near-empty-block overhead under the cluster-default 200 shuffle
+        // partitions.
+        val candIds = cand.select($"id1".as("doc_id"))
+          .union(cand.select($"id2".as("doc_id"))).distinct()
+        val setsPruned = sets.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+        // materialize the (tiny) final result eagerly, then release the cache —
+        // Verify/Bench share one session across all queries, so leaving the
+        // sets cached would squeeze execution memory for everything after
+        val res = Dedup.pairJaccard(cand, setsPruned, "doc_id")
           .select($"id1", $"id2", round($"jaccard", 6).as("jacc"))
           .orderBy($"jacc".desc, $"id1", $"id2")
           .limit(50)
           .localCheckpoint(true)
-        sh.unpersist()
-        wide.unpersist()
+        sets.unpersist()
         res
       },
       Some(s"""WITH $duckShingleBase,
@@ -215,7 +196,7 @@ object Llm {
           .join(sub.select($"doc_id".as("id2"), $"lang".as("lang2")),
             col("id1") < col("id2") && col("lang1") === col("lang2"))
           .select("id1", "id2")
-        Dedup.jaccardPairs(pairs, docs, "doc_id", "text", shingleN = 3)
+        Dedup.pairJaccard(pairs, Dedup.shingleSets(sub, "doc_id", "text"), "doc_id")
           .select($"id1", $"id2",
             round($"n_shared".cast("double") / least($"sz1", $"sz2"), 6)
               .as("containment"))
@@ -256,7 +237,7 @@ object Llm {
           .join(sub.select($"doc_id".as("id2"), $"lang".as("lang2")),
             col("id1") < col("id2") && col("lang1") === col("lang2"))
           .select("id1", "id2")
-        Dedup.jaccardPairs(pairs, docs, "doc_id", "text", shingleN = 3)
+        Dedup.pairJaccard(pairs, Dedup.shingleSets(sub, "doc_id", "text"), "doc_id")
           .select($"id1", $"id2", round($"jaccard", 6).as("jacc"))
           .filter($"jacc" > 0)
           .orderBy($"jacc".desc, $"id1", $"id2")
@@ -297,7 +278,7 @@ object Llm {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         val docs = t(s, dir, "documents").filter($"doc_id" < 300)
-        val sh = Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
+        val sh = Dedup.shingleFrame(docs, "doc_id", "text")
         val freq = sh.groupBy($"shingle").agg(count(lit(1)).as("df"))
           .filter($"df".between(2, 50)).select("shingle")
         val shc = sh.join(freq, "shingle")
@@ -885,11 +866,11 @@ object Llm {
     Q("text_decontaminate",
       (s, dir) => {
         import s.implicits._
-        // shingleFrame stages the token array before the n-gram HOF — calling
-        // TF.shingles($"text",...) inline would re-run the tokenizer regex once per
+        // shingleFrame stages the token array before the n-gram HOF — n-grams of
+        // an inline tokens($"text") would re-run the tokenizer regex once per
         // element_at inside the transform lambda (HOFs block subexpression
         // elimination): measured 10s → 1s at sf0.1 for this query.
-        val sh = Dedup.shingleFrame(t(s, dir, "documents"), "doc_id", "text", shingleN = 3)
+        val sh = Dedup.shingleFrame(t(s, dir, "documents"), "doc_id", "text")
         val probe = sh.filter($"doc_id" < 10).select($"shingle").distinct()
         sh.filter($"doc_id" >= 10)
           .join(broadcast(probe), Seq("shingle"))
@@ -913,8 +894,7 @@ object Llm {
     Q("text_contamination_score",
       (s, dir) => {
         import s.implicits._
-        val sh = Dedup.shingleFrame(t(s, dir, "documents"), "doc_id", "text",
-          shingleN = 3)
+        val sh = Dedup.shingleFrame(t(s, dir, "documents"), "doc_id", "text")
         val probe = sh.filter($"doc_id" < 10).select($"shingle").distinct()
         val corpus = sh.filter($"doc_id" >= 10)
         val tot = corpus.groupBy($"doc_id").agg(count(lit(1)).as("n_shingles"))

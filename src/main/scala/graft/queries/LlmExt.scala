@@ -56,7 +56,7 @@ object LlmExt {
     }
     ensure(shTbl) {
       graft.llm.Dedup.dfCap(
-          graft.llm.Dedup.shingleFrame(existing, "doc_id", "text", 3),
+          graft.llm.Dedup.shingleFrame(existing, "doc_id", "text"),
           corpusDfTau)
         .withColumnRenamed("doc_id", "old_id")
         .write.bucketBy(16, "shingle").mode("overwrite").saveAsTable(shTbl)
@@ -513,7 +513,7 @@ object LlmExt {
           .select($"doc_id", sha2($"text".cast("binary"), 256).as("h"))
           .join(s.table(hashTbl).withColumn("xhit", lit(1)), Seq("h"), "left")
           .select($"doc_id", ($"xhit".isNotNull).as("dup_exact"))
-        val shNew = graft.llm.Dedup.shingleFrame(incoming, "doc_id", "text", 3)
+        val shNew = graft.llm.Dedup.shingleFrame(incoming, "doc_id", "text")
         val nNew = shNew.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
         val near = shNew.join(s.table(shTbl), "shingle")
           .groupBy($"doc_id", $"old_id").agg(count(lit(1)).as("n_shared"))
@@ -598,7 +598,7 @@ object LlmExt {
             .select($"doc_id", sha2($"text".cast("binary"), 256).as("h"))
             .join(s.table(hashTbl).withColumn("xhit", lit(1)), Seq("h"), "left")
             .select($"doc_id", $"xhit".isNotNull.as("dup_exact"))
-          val shNew = graft.llm.Dedup.shingleFrame(batch, "doc_id", "text", 3)
+          val shNew = graft.llm.Dedup.shingleFrame(batch, "doc_id", "text")
           val nNew = shNew.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
           val near = shNew.join(s.table(shTbl), "shingle")
             .groupBy($"doc_id", $"old_id").agg(count(lit(1)).as("n_shared"))

@@ -183,18 +183,16 @@ object LlmExt2c {
         import graft.llm.Dedup
         val docs = t(s, dir, "documents").filter($"doc_id" < 150)
         // r15 persist-sizing rule: a 1-row-group scan caches as ONE partition
-        val sh = Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
+        val sets = Dedup.shingleSets(docs, "doc_id", "text")
           .repartition(s.sparkContext.defaultParallelism, $"doc_id")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sh = sets.select($"doc_id", explode($"shingles").as("shingle"))
         val shared = sh.select($"doc_id".as("id1"), $"shingle")
           .join(sh.select($"doc_id".as("id2"), $"shingle"), "shingle")
           .filter($"id1" < $"id2").select($"id1", $"id2").distinct()
-        val truth = Dedup
-          .jaccardFromShingles(shared, sh.withColumnRenamed("doc_id", "jid"))
+        val truth = Dedup.pairJaccard(shared, sets, "doc_id")
           .filter($"jaccard" >= 0.4).select($"id1", $"id2")
-        val wide = Dedup.minhashWide(sh, "doc_id", numHashes = 8)
-        val cand = Dedup
-          .bandedCandidatesWide(wide, "doc_id", numHashes = 8, bandSize = 2)
+        val cand = Dedup.lshCandidates(sets, "doc_id", numHashes = 8, bandSize = 2)
         val j = cand.withColumn("c", lit(1))
           .join(truth.withColumn("tr", lit(1)), Seq("id1", "id2"), "full_outer")
         val res = j.agg(
@@ -211,7 +209,7 @@ object LlmExt2c {
             when($"n_truth" > 0, round($"tp" / $"n_truth".cast("double"), 6))
               .as("recall"))
           .localCheckpoint(true) // materialize before releasing the cache
-        sh.unpersist()
+        sets.unpersist()
         res.orderBy($"n_truth")
       },
       Some(s"""WITH toks AS (

@@ -362,7 +362,7 @@ object LlmExt3 {
         // eagerly so the cache can be released in the shared session.
         val para = s.sparkContext.defaultParallelism
         val sh = graft.llm.Dedup.shingleFrame(
-            t(s, dir, "documents").repartition(para), "doc_id", "text", 3)
+            t(s, dir, "documents").repartition(para), "doc_id", "text")
           .repartition(para, $"shingle")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val first = sh.groupBy($"shingle").agg(min($"doc_id").as("first_doc"))

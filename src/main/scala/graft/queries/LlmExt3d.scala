@@ -184,7 +184,7 @@ object LlmExt3d {
       (s, dir) => {
         import s.implicits._
         val vocab = graft.llm.Dedup.shingleFrame(
-            t(s, dir, "documents"), "doc_id", "text", 3)
+            t(s, dir, "documents"), "doc_id", "text")
           .select($"shingle").distinct()
         val perBucket = vocab
           .select((conv(substring(md5($"shingle"), 1, 12), 16, 10)

@@ -409,8 +409,6 @@ class JobRunnerSpec extends AnyFunSuite {
   }
 
   test("minhash-dedup spark-op matches the library pipeline's survivor set") {
-    import org.apache.spark.sql.functions.col
-    import graft.llm.Dedup
     val data = tmp()
     val job = Yaml.jobFromString(
       s"""name: md
@@ -433,16 +431,10 @@ class JobRunnerSpec extends AnyFunSuite {
     val out = spark.table("md_out")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     assert(out.columns.toSeq == docs.columns.toSeq) // schema preserved
-    // survivors = docs minus the library pipeline's near-dup victims (id1 kept)
-    val sh = Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
-      .withColumnRenamed("doc_id", "jid")
-    val cands = Dedup.bandedCandidatesWide(
-      Dedup.minhashWide(sh.withColumnRenamed("jid", "doc_id"), "doc_id", 12),
-      "doc_id", 12, 3)
-    val victims = Dedup.jaccardFromShingles(cands, sh)
-      .filter(col("jaccard") >= 0.8).select(col("id2")).distinct()
-    val survivors = docs.join(victims.withColumnRenamed("id2", "doc_id"), Seq("doc_id"),
-      "left_anti")
+    // survivors = docs minus the exploded SQL's near-dup victims (id1 kept)
+    docs.createOrReplaceTempView("md_ref_docs")
+    val victims = spark.sql(graft.llm.DedupSql.victims("md_ref_docs", 12, 3, 0.8))
+    val survivors = docs.join(victims, Seq("doc_id"), "left_anti")
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
     val want = ids(survivors)

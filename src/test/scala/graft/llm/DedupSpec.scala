@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.MinHashBands
@@ -32,7 +31,7 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val docs = (0 until 20)
       .map(i => (i.toLong, s"$banner document number $i talks about topic $i"))
       .toDF("doc_id", "text")
-    val sh = Dedup.shingleFrame(docs, "doc_id", "text", 3)
+    val sh = Dedup.shingleFrame(docs, "doc_id", "text")
     val capped = Dedup.dfCap(sh, tau = 5L)
     val bannerShingle = "licensed under the"
     assert(sh.filter($"shingle" === bannerShingle).count() == 20)
@@ -47,7 +46,7 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(capped.join(sh, Seq("doc_id", "shingle"), "left_anti").count() == 0)
   }
 
-  test("bandedCandidatesWide maxBucket drops oversized buckets, keeps the rest") {
+  test("lshCandidates maxBucket drops oversized buckets, keeps the rest") {
     import spark.implicits._
     // 12 exact copies of one text (a 12-member bucket in EVERY band) plus two
     // near-identical outliers that pair only with each other
@@ -55,10 +54,9 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Seq((100L, "one two three four five six seven eight nine"),
         (101L, "one two three four five six seven eight nine")))
       .toDF("doc_id", "text")
-    val sh = Dedup.shingleFrame(docs, "doc_id", "text", 3)
-    val wide = Dedup.minhashWide(sh, "doc_id", numHashes = 8)
-    val plain = Dedup.bandedCandidatesWide(wide, "doc_id", 8, 2)
-    val capped = Dedup.bandedCandidatesWide(wide, "doc_id", 8, 2, maxBucket = Some(5))
+    val sets = Dedup.shingleSets(docs, "doc_id", "text")
+    val plain = Dedup.lshCandidates(sets, "doc_id", 8, 2)
+    val capped = Dedup.lshCandidates(sets, "doc_id", 8, 2, maxBucket = Some(5))
     // uncapped: the 12-clone group alone yields C(12,2)=66 pairs
     assert(plain.count() >= 66 + 1)
     assert(plain.filter($"id1" === 100 && $"id2" === 101).count() == 1)
@@ -91,7 +89,7 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     import spark.implicits._
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"))
       .toDF("doc_id", "text")
-    val sh = Dedup.shingleFrame(docs, "doc_id", "text", 3)
+    val sh = Dedup.shingleFrame(docs, "doc_id", "text")
     assert(Dedup.dfCap(sh, tau = 2L).count() == sh.count())
   }
 
@@ -103,36 +101,30 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .map(_.group(1).stripSuffix("/")).getOrElse(fail("no sf0.001 row in TESTDATA.md"))
   }
 
-  /** The exploded composition the `minhash-dedup` op ran before the kernel. */
-  private def explodedVictims(docs: DataFrame, numHashes: Int, bandSize: Int,
-      minJaccard: Double): DataFrame = {
-    val sh = Dedup.shingleFrame(docs, "doc_id", "text", shingleN = 3)
-    val cands = Dedup.bandedCandidatesWide(
-      Dedup.minhashWide(sh, "doc_id", numHashes), "doc_id", numHashes, bandSize)
-    Dedup.jaccardFromShingles(cands, sh.withColumnRenamed("doc_id", "jid"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id2").as("doc_id")).distinct()
-  }
-
   private def ids(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
 
-  test("nearDupVictims equals the exploded composition on sf0.001 documents") {
-    val docs = graft.Tables.documents(spark, sf001).select("doc_id", "text")
-    for ((nh, bs, mj) <- Seq((12, 3, 0.8), (12, 3, 0.0), (8, 2, 0.5))) {
-      val got = ids(Dedup.nearDupVictims(docs, "doc_id", "text", nh, bs, mj))
-      val want = ids(explodedVictims(docs, nh, bs, mj))
-      assert(got == want, s"($nh, $bs, $mj)")
-      if (mj == 0.0) assert(want.nonEmpty) // the bands do find candidates here
-    }
+  private def env(kv: (String, String)*) =
+    kv.toMap.map { case (k, v) => k -> graft.spec.EnvValue(v) }
+
+  /** The ids the `minhash-dedup` op drops from `docs`. */
+  private def opVictims(docs: DataFrame, numHashes: Int, bandSize: Int,
+      minJaccard: Double): Set[Long] = {
+    docs.createOrReplaceTempView("op_docs")
+    graft.exec.Ops.builtins("minhash-dedup")(new graft.exec.JobContext(spark, "."),
+      env("INPUT" -> "op_docs", "OUTPUT" -> "op_out", "NUM_HASHES" -> numHashes.toString,
+        "BAND_SIZE" -> bandSize.toString, "MIN_JACCARD" -> minJaccard.toString))
+    ids(docs.select("doc_id")) -- ids(spark.table("op_out").select("doc_id"))
   }
 
-  test("nearDupVictims equals the exploded composition on edge-case documents") {
+  /** Exact dups, near-dups at Jaccard 9/11, exactly 8/10 and 7/9, non-ASCII, and
+    * documents with no shingle: null text, "" and under 3 tokens. */
+  private def edgeDocs = {
     import spark.implicits._
     // a one-token change to an n-token text leaves n-3 of its n-2 shingles:
     // Jaccard (n-3)/(n-1) — 9/11 above 0.8, 8/10 exactly at it, 7/9 below
     def text(p: String, n: Int, last: String) =
       ((0 until n - 1).map(i => s"$p$i") :+ last).mkString(" ")
-    val docs = Seq[(Long, String)](
+    Seq[(Long, String)](
       (1L, null), (2L, ""), (3L, "two words"), (4L, "two words"),
       (10L, "the same text five times"), (11L, "The same text, five times!"),
       (20L, text("a", 12, "x")), (21L, text("a", 12, "y")),
@@ -142,11 +134,61 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (51L, "Naïve café über straße 東京 タワー größe"),
       (52L, "naïve café über strasse 東京 タワー größe"))
       .toDF("doc_id", "text")
-    val got = ids(Dedup.nearDupVictims(docs, "doc_id", "text", 12, 3, 0.8))
-    assert(got == ids(explodedVictims(docs, 12, 3, 0.8)))
+  }
+
+  test("minhash-dedup op and lshCandidates equal the exploded SQL on sf0.001 documents") {
+    val docs = graft.Tables.documents(spark, sf001).select("doc_id", "text")
+    docs.createOrReplaceTempView("sf_docs")
+    val sets = Dedup.shingleSets(docs, "doc_id", "text")
+    for ((nh, bs, mj) <- Seq((12, 3, 0.8), (12, 3, 0.0), (8, 2, 0.5))) {
+      val got = opVictims(docs, nh, bs, mj)
+      val want = ids(spark.sql(DedupSql.victims("sf_docs", nh, bs, mj)))
+      assert(got == want, s"($nh, $bs, $mj)")
+      if (mj == 0.0) assert(want.nonEmpty) // the bands do find candidates here
+      val cands = Dedup.lshCandidates(sets, "doc_id", nh, bs)
+      val wantCands = spark.sql(DedupSql.candidates("sf_docs", nh, bs))
+      assert(cands.exceptAll(wantCands).isEmpty && wantCands.exceptAll(cands).isEmpty,
+        s"candidates ($nh, $bs)")
+    }
+  }
+
+  test("minhash-dedup op equals the exploded SQL on edge-case documents") {
+    val docs = edgeDocs
+    docs.createOrReplaceTempView("edge_docs")
+    val got = opVictims(docs, 12, 3, 0.8)
+    assert(got == ids(spark.sql(DedupSql.victims("edge_docs", 12, 3, 0.8))))
     // copies (case and punctuation fold away) and pairs at or above 0.8 lose
     // their higher id; short, empty and null texts and the 7/9 pair never pair
     assert(got == Set(11L, 21L, 31L, 51L), got)
+  }
+
+  test("pairJaccard equals the exploded SQL on arbitrary pairs, dropping set-less documents") {
+    import spark.implicits._
+    val docs = edgeDocs
+    docs.createOrReplaceTempView("pj_docs")
+    val all = docs.select("doc_id").as[Long].collect().toSeq
+    // about two thirds of the id1 < id2 pairs, the reversed pair (41, 40)
+    // (its forward pair is left out) and a self pair
+    val pairs = (for (a <- all; b <- all if a < b && (a + b) % 3 != 0) yield (a, b)) ++
+      Seq((41L, 40L), (20L, 20L))
+    val pf = pairs.toDF("id1", "id2").repartition(3)
+    pf.createOrReplaceTempView("pj_pairs")
+    val got = Dedup.pairJaccard(pf, Dedup.shingleSets(docs, "doc_id", "text"), "doc_id")
+      .select("id1", "id2", "n_shared", "sz1", "sz2", "jaccard")
+    val want = spark.sql(DedupSql.jaccard("pj_docs", "pj_pairs"))
+    assert(got.schema.map(f => (f.name, f.dataType.simpleString)) == Seq("id1" -> "bigint",
+      "id2" -> "bigint", "n_shared" -> "bigint", "sz1" -> "bigint", "sz2" -> "bigint",
+      "jaccard" -> "double"))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    val rows = got.as[(Long, Long, Long, Long, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> r).toMap
+    // null, "" and under-3-token texts have no set: none of their pairs survive
+    val setless = Set(1L, 2L, 3L, 4L)
+    assert(rows.keys.forall { case (a, b) => !setless(a) && !setless(b) })
+    assert(rows.size == pairs.count { case (a, b) => !setless(a) && !setless(b) })
+    assert(rows((20L, 21L)) == ((20L, 21L, 9L, 10L, 10L, 9.0 / 11)))
+    assert(rows((41L, 40L)) == ((41L, 40L, 7L, 8L, 8L, 7.0 / 9)))
+    assert(rows((20L, 20L)) == ((20L, 20L, 10L, 10L, 10L, 1.0)))
   }
 
   test("minhash_bands equals the SQL min-of-affine-md5 formula") {
@@ -202,11 +244,12 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case f: FilterExec if isSig(f.condition) => f
       case p: ProjectExec if p.projectList.exists(isSig) => p
     }.isEmpty)
-    val parent = docs.join(explodedVictims(docs, 12, 3, 0.8), Seq("doc_id"), "left_anti")
+    val parent = docs.join(s.sql(DedupSql.victims("mhd_docs", 12, 3, 0.8)), Seq("doc_id"),
+      "left_anti")
     val n = shuffles(planned).size
     val n0 = shuffles(parent.queryExecution.executedPlan).size
-    // 8 and 20 on Spark 4.1: adding a shuffle to the op fails here too
-    assert(n <= 8 && n < n0, s"shuffle exchanges: op $n, exploded composition $n0")
+    // adding a shuffle to the op fails here too
+    assert(n <= 8 && n < n0, s"shuffle exchanges: op $n, exploded SQL $n0")
 
     // Executed: the second band branch and the id2 side of the verification
     // are reused exchanges, so the signature runs once per document and the
