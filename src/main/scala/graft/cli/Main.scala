@@ -30,90 +30,35 @@ object Main {
     "box" -> "gaudy", "compact" -> "moderate", "plain" -> "minimal")
 
   /** `-h`/`--help` golden (reference `__main__.py:12-38` argument_parser();
-    * round-15 fresh-eyes sweep #4c). Rendered through the stdlib-argparse
-    * HelpFormatter rules at width 80 (same rules as [[graft.spec.ArgParse
-    * .helpLines]]): usage parts wrap at text-width 78 with continuations
-    * aligned under the prog name, optionals before positionals with the
-    * positional block starting its own line; option invocations ≤20 chars
-    * share the line with help at column 24, longer ones push help to the
-    * next line; help text wraps at width 54. The `{1,2,3,...}` choices
-    * metavar is rendered as argparse does — including the unreachable int
-    * choices (see the styleAliases note below). Engine-only extensions are
-    * listed after the golden block so the reference transcript stays an
-    * exact prefix. */
+    * round-15 fresh-eyes sweep #4c), rendered by the stdlib-argparse formatter
+    * [[graft.spec.ArgParse.formatHelp]]. The `{1,2,3,...}` choices metavar is
+    * rendered as argparse does — including the unreachable int choices (see the
+    * styleAliases note above). Engine-only extensions are listed after the
+    * golden block so the reference transcript stays an exact prefix. */
   def helpText: String = {
-    val prog = "xETL"
-    val optParts = List("[-h]", "[-c COMMANDS]",
-      "[-l {1,2,3,minimal,moderate,gaudy}]", "[-t]", "[--dryrun]")
-    val posParts = List("manifest")
-    val lead = s"usage: $prog "
-    val indent = " " * lead.length
-    val textWidth = 78
-    def wrapParts(parts: List[String], first: Boolean): List[String] = {
-      val lines = scala.collection.mutable.ListBuffer[String]()
-      var line = new StringBuilder(if (first) lead else indent)
-      var started = false
-      parts.foreach { p =>
-        if (started && line.length + 1 + p.length > textWidth) {
-          lines += line.toString; line = new StringBuilder(indent); started = false
-        }
-        if (started) line.append(' ')
-        line.append(p); started = true
-      }
-      lines += line.toString
-      lines.toList
-    }
-    val oneLine = lead + (optParts ++ posParts).mkString(" ")
-    val usage =
-      if (oneLine.length <= textWidth) List(oneLine)
-      // argparse groups optionals and positionals into separate wrapped
-      // blocks when the one-line form overflows
-      else wrapParts(optParts, first = true) ++ wrapParts(posParts, first = false)
-    def entry(inv: String, help: String): List[String] = {
-      val wrapped = wrapText(help, 54)
-      if (inv.length <= 20)
-        (f"  $inv%-20s  ${wrapped.headOption.getOrElse("")}".stripTrailing()) ::
-          wrapped.drop(1).map(w => " " * 24 + w)
-      else s"  $inv" :: wrapped.map(w => " " * 24 + w)
-    }
-    val positionals = List(entry("manifest",
-      "Path to job manifest YAML file. Relative paths are resolved relative " +
-        "to the current working directory."))
+    val style = "{1,2,3,minimal,moderate,gaudy}"
     val decoHelp = "Sets the amount to decoration to add around logs from 1 " +
       "(minimal) to 3 (gaudy)."
-    val options = List(
-      entry("-h, --help", "show this help message and exit"),
-      entry("-c COMMANDS, --commands COMMANDS",
-        "Comma-separated list of commands to execute. Commands will be " +
-          "executed in the order defined by the job, regardless of the " +
-          "order in this list."),
-      entry("-l {1,2,3,minimal,moderate,gaudy}, --log-style " +
-        "{1,2,3,minimal,moderate,gaudy}", decoHelp),
-      entry("-t, --no-timestamps", decoHelp),
-      entry("--dryrun", "Print the task details instead of executing them"))
-    val golden = (usage ++ List("", "positional arguments:") ++
-      positionals.flatten ++ List("", "options:") ++ options.flatten)
-      .mkString("", "\n", "\n")
-    golden + List("", "engine extensions:",
+    val golden = graft.spec.ArgParse.formatHelp("xETL",
+      List("[-h]", "[-c COMMANDS]", s"[-l $style]", "[-t]", "[--dryrun]"), List("manifest"),
+      description = None, List(
+        "positional arguments" -> List("manifest" ->
+          ("Path to job manifest YAML file. Relative paths are resolved relative " +
+            "to the current working directory.")),
+        "options" -> List(
+          "-h, --help" -> "show this help message and exit",
+          "-c COMMANDS, --commands COMMANDS" ->
+            ("Comma-separated list of commands to execute. Commands will be " +
+              "executed in the order defined by the job, regardless of the " +
+              "order in this list."),
+          s"-l $style, --log-style $style" -> decoHelp,
+          "-t, --no-timestamps" -> decoHelp,
+          "--dryrun" -> "Print the task details instead of executing them")))
+    (golden ++ List("", "engine extensions:",
       "  --dry-run             alias of --dryrun",
       "  --test-task NAME      run a task's in-manifest tests and exit",
-      "  -l also accepts box (gaudy), compact (moderate), plain (minimal)")
+      "  -l also accepts box (gaudy), compact (moderate), plain (minimal)"))
       .mkString("", "\n", "\n")
-  }
-
-  private def wrapText(text: String, width: Int): List[String] = {
-    val words = text.split(" ").toList
-    val lines = scala.collection.mutable.ListBuffer[String]()
-    var line = new StringBuilder
-    words.foreach { w =>
-      if (line.nonEmpty && line.length + 1 + w.length > width) {
-        lines += line.toString; line = new StringBuilder
-      }
-      if (line.nonEmpty) line.append(' ')
-      line.append(w)
-    }
-    if (line.nonEmpty) lines += line.toString
-    lines.toList
   }
 
   /** The reference keys color on `sys.stdout.isatty()` (logging.py:111-112);
@@ -147,7 +92,7 @@ object Main {
     try {
       val spark = sparkF()
       val ctx = new ContextLogger(sink, style, timestamps, colored)
-      val runner = new JobRunner(spark, sink, Some(ctx))
+      val runner = new JobRunner(spark, ctx)
       ctx.info(s"Loading job manifest at: $p")
       testTask match {
         case Some(name) =>

@@ -139,6 +139,11 @@ final class ContextLogger(sink: String => Unit, style: String = "gaudy",
 
   /** Ordinary line inside the current context. */
   def line(msg: String): Unit = info(msg)
+
+  /** A logger of this style whose sink is this logger's current context: a
+    * nested job's frames sit inside the outer COMMAND frame, as the
+    * reference's streamed inner CLI output does (R13). */
+  def nested: ContextLogger = new ContextLogger(line, style, timestamps, colored, clock)
 }
 
 object ContextLogger {

@@ -30,36 +30,28 @@ final case class JobDataDirectoryNotFound(dataDir: String)
   *
   * `dryrun` prints the fully-resolved manifest instead of executing.
   *
-  * `context` (optional) renders JOB/COMMAND scopes through a [[ContextLogger]]
-  * (reference R15 nested log contexts); without it, plain lines go to `log`. */
-final class JobRunner(spark: SparkSession, log: String => Unit = println,
-    context: Option[ContextLogger] = None) {
+  * Every line renders through `log`, a [[ContextLogger]] of JOB/COMMAND scopes
+  * (reference R15 nested log contexts). */
+final class JobRunner(spark: SparkSession, log: ContextLogger) {
 
-  /** Ordinary output line, routed through the context prefixes when present. */
-  private def out(msg: String): Unit =
-    context.map(_.line(msg)).getOrElse(log(msg))
+  private def out(msg: String): Unit = log.line(msg)
+  private def warn(msg: String): Unit = out(s"WARNING: $msg")
 
   private def buildRegistry(resolved: Job): Registry = {
-    // With a log context, discovery narrates like the reference
-    // (test_end_to_end.py:352-433 goldens): per-manifest "Loading task at:"
-    // then the detected-task catalogue.
-    val info: String => Unit =
-      if (context.isDefined) out else _ => ()
-    if (context.isDefined) {
-      if (resolved.tasks.nonEmpty)
-        out("Discovering tasks at paths: " +
-          resolved.tasks.map(t => s"'$t'").mkString("[", ", ", "]"))
-      else out("WARNING: The property `tasks` is not defined in the job " +
-        "manifest, no tasks will be available")
-    }
-    val discovered = Registry.discover(resolved.tasks,
-      w => out(s"WARNING: $w"), info, e => out(s"ERROR: $e"))
-    if (context.isDefined && discovered.names.nonEmpty) {
+    // discovery narrates like the reference (test_end_to_end.py:352-433
+    // goldens): per-manifest "Loading task at:" then the detected-task catalogue
+    if (resolved.tasks.nonEmpty)
+      out("Discovering tasks at paths: " +
+        resolved.tasks.map(t => s"'$t'").mkString("[", ", ", "]"))
+    else warn("The property `tasks` is not defined in the job manifest, " +
+      "no tasks will be available")
+    val discovered = Registry.discover(resolved.tasks, warn, out, e => out(s"ERROR: $e"))
+    if (discovered.names.nonEmpty) {
       out("Available tasks detected:")
       discovered.names.foreach(n => out(s" - $n"))
     }
-    Ops.taskSpecs.values.foldLeft(discovered) { (r, spec) =>
-      if (r.get(spec.name).isDefined) r else r.withTask(spec)
+    Ops.builtins.values.foldLeft(discovered) { (r, op) =>
+      if (r.get(op.name).isDefined) r else r.withTask(op.task)
     }
   }
 
@@ -68,12 +60,12 @@ final class JobRunner(spark: SparkSession, log: String => Unit = println,
     * this closes that last gap: resolve the job, discover the task, execute each
     * test case (env + verify, exit 0 = pass) and report per-case results. */
   def testTask(job: Job, taskName: String): Map[String, Boolean] = {
-    val resolved = Placeholders.resolve(job, sys.env, w => out(s"WARNING: $w"))
+    val resolved = Placeholders.resolve(job, sys.env, warn)
     val registry = buildRegistry(resolved)
     val task = registry.get(taskName).getOrElse(
       throw SpecError(s"unknown task '$taskName'"))
     if (task.tests.isEmpty) out(s"task '${task.name}' declares no tests")
-    val results = runTaskTests(task, new JobContext(spark, resolved.data, out))
+    val results = runTaskTests(task, new JobContext(spark, resolved.data, log))
     results.toSeq.sortBy(_._1).foreach { case (name, ok) =>
       out(s"TEST ${task.name}/$name: ${if (ok) "PASS" else "FAIL"}")
     }
@@ -82,13 +74,11 @@ final class JobRunner(spark: SparkSession, log: String => Unit = println,
 
   def execute(job: Job, commands: Option[Seq[String]] = None,
       dryrun: Boolean = false): Unit = {
-    val resolved = Placeholders.resolve(job, sys.env, w => out(s"WARNING: $w"))
+    val resolved = Placeholders.resolve(job, sys.env, warn)
     // reference job.py:159: the JOB frame opens first; discovery and the
     // parsed-manifest line narrate inside it
-    context.foreach { c =>
-      c.jobStart(resolved.name)
-      c.info(s"Parsed manifest for job: ${resolved.name}")
-    }
+    log.jobStart(resolved.name)
+    log.info(s"Parsed manifest for job: ${resolved.name}")
     val registry = buildRegistry(resolved)
 
     val filter = commands.map(_.flatMap(_.split(",")).map(c => Keys.snake(c.trim)).toSet)
@@ -106,10 +96,7 @@ final class JobRunner(spark: SparkSession, log: String => Unit = println,
     filter.foreach { _ =>
       val kept = selected.map(_._2).toSet
       resolved.commands.zipWithIndex.foreach { case (c, i) =>
-        if (!kept.contains(i)) {
-          val msg = s"Skipping command `${c.name.getOrElse("None")}`"
-          context.map(_.warning(msg)).getOrElse(out(s"WARNING: $msg"))
-        }
+        if (!kept.contains(i)) log.warning(s"Skipping command `${c.name.getOrElse("None")}`")
       }
     }
 
@@ -122,25 +109,31 @@ final class JobRunner(spark: SparkSession, log: String => Unit = println,
       throw JobDataDirectoryNotFound(resolved.data)
     }
 
-    // fail-fast: validate ALL selected commands before running ANY (job.py:198-200)
+    // fail-fast: validate ALL selected commands before running ANY (job.py:198-200),
+    // including that a `spark-op:` task names a built-in op
     val errors = selected.flatMap { case (cmd, _) =>
       val task = registry.get(cmd.task).getOrElse(
         throw SpecError(s"unknown task '${cmd.task}'"))
-      Validation.validate(task, cmd.env, w => out(s"WARNING: $w"))
+      val opError = task.body match {
+        case TaskBody.SparkOp(op) if !Ops.builtins.contains(op) => List(unknownOp(task, op))
+        case _ => Nil
+      }
+      Validation.validate(task, cmd.env, warn) ++ opError
     }
     if (errors.nonEmpty)
       throw SpecError("input validation failed:\n  " + errors.mkString("\n  "))
 
+    // n = UNFILTERED total, mirroring job.py:207's len(self.commands), so
+    // headers under a --commands filter read "1 of 3"
+    val n = resolved.commands.size
     if (dryrun) {
       // Reference dryrun (job.py:160-171, golden-tested test_end_to_end.py:252-349):
       // the fully-resolved manifest as an indented YAML dump — users inspect resolved
-      // placeholders here — then, per command, what WOULD execute (run/cwd/env,
-      // reference task.py dryrun branch) without running anything.
+      // placeholders here — then, per command, what WOULD execute (run/cwd/env with
+      // the task's declared defaults, reference task.py dryrun branch) without
+      // running anything.
       out(s"DRYRUN: job '${resolved.name}' — manifest parsed as:")
       ManifestRender.job(resolved).foreach(l => out(s"  $l"))
-      // Reference passes len(self.commands) — the UNFILTERED total — as n
-      // (job.py:207), so headers under a --commands filter read "1 of 3".
-      val n = resolved.commands.size
       selected.zipWithIndex.foreach { case ((cmd, _), i) =>
         val label = cmd.name.getOrElse(cmd.task)
         if (cmd.skip) out(s"DRYRUN: [${i + 1}/$n] '$label' skipped")
@@ -159,44 +152,35 @@ final class JobRunner(spark: SparkSession, log: String => Unit = println,
           out(s"  env: ${renderEnv(env)}")
         }
       }
-      context.foreach(_.info("Done! \\o/")) // reference prints Done after dryrun too
-      context.foreach(_.jobEnd(resolved.name)) // close the dryrun JOB frame
-      return
-    }
-
-    val ctx = new JobContext(spark, resolved.data, out)
-    // n = UNFILTERED total, mirroring job.py:207's len(self.commands)
-    val n = resolved.commands.size
-    selected.zipWithIndex.foreach { case ((cmd, _), i) =>
-      val label = cmd.name.getOrElse(cmd.task)
-      if (cmd.skip) {
-        // reference skip label (job.py:205): `#N` for unnamed commands
-        val skipLabel = cmd.name.getOrElse(s"#${i + 1}")
-        if (context.isDefined)
+    } else {
+      val ctx = new JobContext(spark, resolved.data, log)
+      selected.zipWithIndex.foreach { case ((cmd, _), i) =>
+        if (cmd.skip) {
+          // reference skip label (job.py:205): `#N` for unnamed commands
+          val skipLabel = cmd.name.getOrElse(s"#${i + 1}")
           out(s"Skipping command `$skipLabel` from job '${resolved.name}'")
-        else out(s"COMMAND [${i + 1}/$n] '$label' skipped")
-      } else {
-        context.map(_.commandStart(cmd.name, i + 1, n))
-          .getOrElse(log(s"COMMAND [${i + 1}/$n] '$label' (task ${cmd.task})"))
-        // reference command echo (test_end_to_end goldens): the resolved
-        // command model, 2-space indented, nulls explicit
-        context.foreach(_ => commandEcho(cmd).foreach(l => out(s"  $l")))
-        val task = registry.get(cmd.task).get
-        val env = Validation.withDefaults(task, cmd.env)
-        // reference command.py:79-85: the task execution is its own COMMAND
-        // frame, closed by a "Return code: N" footer
-        context.foreach(_.taskStart(cmd.task))
-        val rc = executeTask(task, env, ctx)
-        context.foreach(_.taskEnd(rc))
-        context.foreach(_.commandEnd())
-        if (rc != 0) throw TaskFailure(label, rc)
+        } else {
+          log.commandStart(cmd.name, i + 1, n)
+          // reference command echo (test_end_to_end goldens): the resolved
+          // command model, 2-space indented, nulls explicit
+          commandEcho(cmd).foreach(l => out(s"  $l"))
+          val task = registry.get(cmd.task).get
+          val env = Validation.withDefaults(task, cmd.env)
+          // reference command.py:79-85: the task execution is its own COMMAND
+          // frame, closed by a "Return code: N" footer
+          log.taskStart(cmd.task)
+          val rc = executeTask(task, env, ctx)
+          log.taskEnd(rc)
+          log.commandEnd()
+          if (rc != 0) throw TaskFailure(cmd.name.getOrElse(cmd.task), rc)
+        }
       }
     }
     // Reference logs "Done! \o/" INSIDE the job frame (job.py:209; gaudy
-    // golden test_end_to_end.py:346 shows `│ Done! \o/`), before it closes.
-    context.foreach(_.info("Done! \\o/"))
-    context.map(_.jobEnd(resolved.name))
-      .getOrElse(log(s"JOB '${resolved.name}' completed"))
+    // golden test_end_to_end.py:346 shows `│ Done! \o/`), after a dryrun too,
+    // before it closes.
+    log.info("Done! \\o/")
+    log.jobEnd(resolved.name)
   }
 
   /** The reference's pre-execution command dump (explicit nulls, full
@@ -235,13 +219,14 @@ final class JobRunner(spark: SparkSession, log: String => Unit = println,
   def executeTask(task: Task, env: Map[String, EnvValue], ctx: JobContext): Int =
     task.body match {
       case TaskBody.SparkOp(op) =>
-        Ops.builtins.get(op) match {
-          case Some(fn) => fn(ctx, env); 0
-          case None => throw SpecError(s"unknown spark-op '$op' in task '${task.name}'")
-        }
+        Ops.builtins.getOrElse(op, throw SpecError(unknownOp(task, op)))(ctx, env)
+        0
       case TaskBody.Exec(argv) => runSubprocess(task, argv, env)
       case TaskBody.Script(interp, script) => runSubprocess(task, interp :+ script, env)
     }
+
+  private def unknownOp(task: Task, op: String): String =
+    s"unknown spark-op '$op' in task '${task.name}'"
 
   private def runSubprocess(task: Task, argv: List[String],
       env: Map[String, EnvValue]): Int = {

@@ -647,7 +647,7 @@ object Llmb {
              |      input: $${project.env.OUTPUT}
              |      path: $${job.data}/out
              |""".stripMargin
-        new graft.exec.JobRunner(s, _ => ())
+        new graft.exec.JobRunner(s, new graft.exec.ContextLogger(_ => ()))
           .execute(graft.spec.Yaml.jobFromString(manifest))
         s.read.parquet(s"$data/out").orderBy(col("doc_id"))
       },

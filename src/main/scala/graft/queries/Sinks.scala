@@ -1,10 +1,12 @@
 package graft.queries
 
-/** Scratch area for sink round-trip queries. Lives under the repo target dir (the only
-  * writable area besides the driver-provided outDir). */
+/** Scratch area for sink round-trip queries: `GRAFT_SCRATCH`, or else `target/scratch`
+  * under the working directory (sbt forks `run` and tests in the checkout), so two
+  * checkouts never share `_temporary` trees. */
 object Sinks {
   lazy val scratchDir: String = {
-    val d = sys.env.getOrElse("GRAFT_SCRATCH", "/root/repo/target/scratch")
+    val d = sys.env.getOrElse("GRAFT_SCRATCH",
+      java.nio.file.Paths.get(sys.props("user.dir"), "target", "scratch").toString)
     new java.io.File(d).mkdirs()
     d
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.exec.JobRunner
+import graft.exec.{ContextLogger, JobRunner}
 import graft.spec.Yaml
 import QueryDSL._
 
@@ -50,7 +50,7 @@ object SpecQ {
              |      input: $${summarize.env.OUTPUT}
              |      path: $${job.data}/out
              |""".stripMargin
-        new JobRunner(s, _ => ()).execute(Yaml.jobFromString(manifest))
+        new JobRunner(s, new ContextLogger(_ => ())).execute(Yaml.jobFromString(manifest))
         s.read.parquet(s"$data/out").orderBy(col("l_returnflag"))
       },
       Some(s"""SELECT l_returnflag, COUNT(*) AS n, ${sqlDsum("l_extendedprice")} AS total

@@ -128,40 +128,100 @@ object ArgParse {
     }
   }
 
-  /** argparse-style help text (reference test_argparser.py:46-86 golden):
-    * a wrapped usage line — required inputs bare, optional ones bracketed,
-    * continuations aligned under the prog name — the task description, then
-    * the options table with help text at column 24 (next line when the
-    * invocation is wider, exactly argparse's HelpFormatter rule). */
+  /** argparse help for a task (reference test_argparser.py:46-86 golden): each
+    * declared input is `--my-var MY_VAR`, bare in the usage when required and
+    * bracketed otherwise, with its description as help. */
   def helpLines(task: Task, prog: String): List[String] = {
-    val items = "[-h]" +: task.env.toList.map { case (k, in) =>
-      val inv = s"--${argNameForEnv(k)} $k"
-      if (in.required) inv else s"[$inv]"
+    val opts = task.env.toList.map { case (k, in) => (s"--${argNameForEnv(k)} $k", in) }
+    formatHelp(prog,
+      "[-h]" :: opts.map { case (inv, in) => if (in.required) inv else s"[$inv]" }, Nil,
+      task.description,
+      List("options" -> (("-h, --help", "show this help message and exit") ::
+        opts.map { case (inv, in) => inv -> in.description.getOrElse("") })))
+  }
+
+  /** Text width of stdlib argparse's HelpFormatter at `COLUMNS=80` (it keeps 2). */
+  private val Width = 78
+
+  /** stdlib argparse `format_help` (HelpFormatter, python3 3.11) at `COLUMNS=80`:
+    *
+    *   - the usage stays on one line up to width 78; past it, its parts wrap with
+    *     continuations aligned after the prog name, optionals and positionals in
+    *     separate blocks (argparse's layout for a prog up to 3/4 of the width;
+    *     a longer one, on a line of its own, is not rendered here)
+    *   - the description is filled to width 78
+    *   - each section lists `(invocation, help)` entries with help at column
+    *     min(longest invocation + 4, 24); an invocation wider than that column
+    *     minus 4 puts its help on the next line, and help wraps to the rest of
+    *     the width. An entry without help is its invocation alone.
+    *
+    * `optUsage`/`posUsage` are the usage forms of the optionals and positionals
+    * (`[-h]`, `--url URL`, `manifest`); sections without entries are left out. */
+  def formatHelp(prog: String, optUsage: List[String], posUsage: List[String],
+      description: Option[String],
+      sections: List[(String, List[(String, String)])]): List[String] = {
+    val prefix = "usage: "
+    val indent = " " * (prefix.length + prog.length + 1)
+    // argparse wraps usage by regexp parts (a bracketed group is one part, a
+    // bare `--url URL` is two), appending each part while the line stays
+    // within the width
+    def parts(items: List[String]) =
+      raw"\(.*?\)+(?=\s|$$)|\[.*?\]+(?=\s|$$)|\S+".r.findAllIn(items.mkString(" ")).toList
+    def fill(start: String, ps: List[String]): Vector[String] = ps.foldLeft(Vector(start)) {
+      (ls, p) =>
+        if (ls.last.isBlank) ls.init :+ (ls.last + p)
+        else if (ls.last.length + 1 + p.length > Width) ls :+ (indent + p)
+        else ls.init :+ s"${ls.last} $p"
     }
-    val lead = s"usage: $prog "
-    val width = 80
-    val usage = scala.collection.mutable.ListBuffer[String]()
-    var line = new StringBuilder(lead)
-    items.foreach { it =>
-      if (line.length + it.length > width && line.toString.trim != "usage:"
-          && line.length > lead.length) {
-        usage += line.toString.stripTrailing()
-        line = new StringBuilder(" " * lead.length)
+    val oneLine = (prog :: optUsage ++ posUsage).mkString(" ")
+    val (head, tail) = if (optUsage.nonEmpty) (optUsage, posUsage) else (posUsage, Nil)
+    val usage =
+      if (prefix.length + oneLine.length <= Width) List(prefix + oneLine)
+      else (fill(prefix + prog, parts(head)) ++
+        (if (tail.isEmpty) Nil else fill(indent, parts(tail)))).toList
+    val helpPos = math.min(sections.flatMap(_._2).map(_._1.length).maxOption
+      .getOrElse(0) + 4, 24)
+    def entry(inv: String, help: String): List[String] = wrap(help, Width - helpPos) match {
+      case Nil => List(s"  $inv")
+      case first :: more if inv.length <= helpPos - 4 =>
+        s"  ${inv.padTo(helpPos - 4, ' ')}  $first" :: more.map(" " * helpPos + _)
+      case all => s"  $inv" :: all.map(" " * helpPos + _)
+    }
+    usage ++ description.toList.flatMap(d => "" :: wrap(d, Width)) ++
+      sections.filter(_._2.nonEmpty).flatMap { case (heading, entries) =>
+        "" :: s"$heading:" :: entries.flatMap { case (inv, help) => entry(inv, help) }
       }
-      line.append(it).append(' ')
-    }
-    usage += line.toString.stripTrailing()
-    val opts = ("-h, --help", "show this help message and exit") +:
-      task.env.toList.map { case (k, in) =>
-        (s"--${argNameForEnv(k)} $k", in.description.getOrElse(""))
+  }
+
+  /** textwrap's chunks: runs of spaces, and words split after a hyphen
+    * between letters (`partially-` `downloaded`) — TextWrapper.wordsep_re. */
+  private val Chunk = ("""(?U) +|(?<=[\w!"'&.,?])-{2,}(?=\w)|[^ ]+?(?:-(?:(?<=[^\d\W]{2}-)""" +
+    """|(?<=[^\d\W]-[^\d\W]-))(?=[^\d\W]-?[^\d\W])|(?= |\z)|(?<=[\w!"'&.,?])(?=-{2,}\w))""").r
+
+  /** `textwrap.wrap(text, width)` after argparse collapses whitespace: greedy
+    * lines of chunks, spaces dropped at line ends, a chunk wider than the line
+    * broken at its last fitting hyphen or else at the width. */
+  private def wrap(text: String, width: Int): List[String] = {
+    var chunks = Chunk.findAllIn(text.trim.replaceAll("\\s+", " ")).toList
+    val out = scala.collection.mutable.ListBuffer[String]()
+    while (chunks.nonEmpty) {
+      if (out.nonEmpty && chunks.head.isBlank) chunks = chunks.tail
+      val line = scala.collection.mutable.ListBuffer[String]()
+      var len = 0
+      while (chunks.nonEmpty && len + chunks.head.length <= width) {
+        line += chunks.head; len += chunks.head.length; chunks = chunks.tail
       }
-    val optLines = opts.flatMap { case (inv, help) =>
-      if (inv.length <= 21) List(f"  $inv%-21s $help".stripTrailing())
-      else List(s"  $inv", s"${" " * 24}$help".stripTrailing())
+      if (chunks.nonEmpty && chunks.head.length > width) {
+        val c = chunks.head
+        val room = math.max(width - len, 1)
+        val hyphen = c.lastIndexOf('-', room - 1)
+        val end = if (hyphen > 0 && c.take(hyphen).exists(_ != '-')) hyphen + 1 else room
+        line += c.take(end); chunks = c.drop(end) :: chunks.tail
+      }
+      if (line.nonEmpty && line.last.isBlank) line.remove(line.size - 1)
+      if (line.nonEmpty) out += line.mkString
     }
-    usage.toList ++ List("") ++
-      task.description.toList ++ (if (task.description.isDefined) List("") else Nil) ++
-      List("options:") ++ optLines
+    out.toList
   }
 
   /** Conversion failures use the exact stdlib-argparse wording

@@ -38,6 +38,12 @@ class HarnessSpec extends AnyFunSuite {
     Harness.consume(df)
   }
 
+  test("the scratch directory defaults to target/scratch under the working directory") {
+    assume(sys.env.get("GRAFT_SCRATCH").isEmpty, "GRAFT_SCRATCH is set")
+    assert(Paths.get(graft.queries.Sinks.scratchDir) ==
+      Paths.get(sys.props("user.dir"), "target", "scratch"))
+  }
+
   test("only Harness.scala builds a session or pastes the all-column consume") {
     val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root), s"main sources not found at $root")

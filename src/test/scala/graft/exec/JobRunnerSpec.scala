@@ -21,7 +21,7 @@ class JobRunnerSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def runner(buf: scala.collection.mutable.ListBuffer[String]) =
-    new JobRunner(spark, m => buf += m)
+    new JobRunner(spark, new ContextLogger(m => buf += m, style = "minimal", timestamps = false))
 
   test("two-command spark-op pipeline with ${previous} chaining writes real output") {
     val data = tmp()
@@ -51,7 +51,7 @@ class JobRunnerSpec extends AnyFunSuite {
     val out = spark.read.parquet(s"$data/out")
     assert(out.count() > 0)
     assert(out.filter("l_quantity <= 45").count() == 0)
-    assert(log.exists(_.contains("completed")))
+    assert(log.exists(_.contains("Done! \\o/")))
     // Observation metric emitted by the sink op, no extra pass
     assert(log.exists(l => l.contains("wrote") && l.contains("rows")))
   }
@@ -187,7 +187,7 @@ class JobRunnerSpec extends AnyFunSuite {
     // (command.py:76-85). `box` stays as a gaudy alias.
     val buf = scala.collection.mutable.ListBuffer[String]()
     val ctx = new ContextLogger(m => buf += m, style = "box", timestamps = false)
-    new JobRunner(spark, m => buf += m, Some(ctx)).execute(job)
+    new JobRunner(spark, ctx).execute(job)
     assert(buf.exists(_.startsWith("╭──╴Executing job: framed")))
     assert(buf.exists(_.startsWith("┏━━╸Executing command: load (1 of 1)")))
     assert(buf.exists(_.startsWith("┃╭──╴Executing task: read-parquet")))
@@ -195,7 +195,7 @@ class JobRunnerSpec extends AnyFunSuite {
     // minimal style (alias plain) has bare headers, no frames
     val buf2 = scala.collection.mutable.ListBuffer[String]()
     val ctx2 = new ContextLogger(m => buf2 += m, style = "plain", timestamps = false)
-    new JobRunner(spark, m => buf2 += m, Some(ctx2)).execute(job)
+    new JobRunner(spark, ctx2).execute(job)
     assert(buf2.exists(_.startsWith("Executing job: framed")))
     assert(!buf2.exists(_.contains("╭")))
   }
@@ -218,7 +218,7 @@ class JobRunnerSpec extends AnyFunSuite {
          |""".stripMargin)
     val buf = scala.collection.mutable.ListBuffer[String]()
     val ctx = new ContextLogger(m => buf += m, style = "box", timestamps = false)
-    new JobRunner(spark, m => buf += m, Some(ctx)).execute(job)
+    new JobRunner(spark, ctx).execute(job)
     // reference command.py:70-74: unnamed header has no colon/label/parens
     assert(buf.exists(_.startsWith("┏━━╸Executing command 1 of 2")))
     // reference job.py:205: unnamed skip label is `#N`
@@ -250,7 +250,7 @@ class JobRunnerSpec extends AnyFunSuite {
          |""".stripMargin)
     val buf = scala.collection.mutable.ListBuffer[String]()
     val ctx = new ContextLogger(m => buf += m, style = "box", timestamps = false)
-    new JobRunner(spark, m => buf += m, Some(ctx)).execute(job, commands = Some(Seq("two")))
+    new JobRunner(spark, ctx).execute(job, commands = Some(Seq("two")))
     // reference job.py:207: total is len(self.commands) = 3, position is the
     // FILTERED enumerate index = 1, so the selected command reads "1 of 3"
     assert(buf.exists(_.startsWith("┏━━╸Executing command: two (1 of 3)")), buf.mkString("\n"))
@@ -280,7 +280,7 @@ class JobRunnerSpec extends AnyFunSuite {
     // the echo, which is all this test needs.
     val buf = scala.collection.mutable.ListBuffer[String]()
     val ctx = new ContextLogger(m => buf += m, style = "plain", timestamps = false)
-    val r = new JobRunner(spark, m => buf += m, Some(ctx))
+    val r = new JobRunner(spark, ctx)
     try r.execute(job) catch { case _: Exception => () }
     val echo = buf.toList
     val zi = echo.indexWhere(_.contains("ZULU: true"))
@@ -323,7 +323,7 @@ class JobRunnerSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$data/inner-data/out").count() == 5)
     // inner views share the outer catalog (analogue of the shared filesystem)
     assert(spark.table("inner_regions").count() == 5)
-    assert(log.exists(_.contains("[nested]")))
+    assert(log.exists(_.contains("Executing job: inner")))
   }
 
   test("dryrun prints resolved manifest and executes nothing") {
@@ -371,6 +371,10 @@ class JobRunnerSpec extends AnyFunSuite {
     val log = scala.collection.mutable.ListBuffer[String]()
     runner(log).execute(job, dryrun = true)
     val expected = List(
+      "Executing job: dry-gold",
+      "Parsed manifest for job: dry-gold",
+      "WARNING: The property `tasks` is not defined in the job manifest, " +
+        "no tasks will be available",
       // resolution-time warnings precede the dump: job env propagates into every
       // command's env (R4), where the tasks don't declare it (R10
       // warn-on-unknown). No missing-host-var warning: BASE_QTY has a job-env
@@ -404,7 +408,8 @@ class JobRunnerSpec extends AnyFunSuite {
       "DRYRUN: [1/2] 'load' (task read-parquet) would execute with:",
       "  spark-op: read-parquet",
       s"  env: {BASE_QTY=45, OUTPUT=dg_regions, PATH=$sf/region.parquet}",
-      "DRYRUN: [2/2] 'narrow' skipped")
+      "DRYRUN: [2/2] 'narrow' skipped",
+      "Done! \\o/")
     assert(log.toList == expected)
   }
 
@@ -503,7 +508,7 @@ class JobRunnerSpec extends AnyFunSuite {
     val log = scala.collection.mutable.ListBuffer[String]()
     runner(log).execute(job)
     assert(spark.read.parquet(s"$data/out").count() == 5)
-    assert(log.exists(_.contains("skipped")))
+    assert(log.exists(_.contains("Skipping command `broken`")))
   }
 
   test("fail-fast: a bad command blocks ALL execution, including valid earlier ones") {
@@ -522,7 +527,7 @@ class JobRunnerSpec extends AnyFunSuite {
     val log = scala.collection.mutable.ListBuffer[String]()
     val e = intercept[SpecError](runner(log).execute(job))
     assert(e.getMessage.contains("PATH"))
-    assert(!log.exists(_.contains("COMMAND [1"))) // nothing ran
+    assert(!log.exists(_.contains("Executing command"))) // nothing ran
   }
 
   test("command filter selects by name, case-insensitively") {

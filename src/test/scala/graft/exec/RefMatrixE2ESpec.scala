@@ -67,7 +67,7 @@ class RefMatrixE2ESpec extends AnyFunSuite {
     val (dir, jobYml) = writeFixture()
     val buf = scala.collection.mutable.ListBuffer[String]()
     val ctx = new ContextLogger(buf += _, style = style, timestamps = false)
-    val runner = new JobRunner(spark, buf += _, Some(ctx))
+    val runner = new JobRunner(spark, ctx)
     ctx.info(s"Loading job manifest at: $jobYml")
     // "Done! \o/" is now logged by JobRunner.execute inside the job frame
     // (reference job.py:209), matching Main's CLI body.

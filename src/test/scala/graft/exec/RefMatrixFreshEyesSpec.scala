@@ -163,7 +163,7 @@ class RefMatrixFreshEyesSpec extends AnyFunSuite {
     val (dir, jobYml) = fixture()
     val buf = scala.collection.mutable.ListBuffer[String]()
     val ctx = new ContextLogger(buf += _, style = "gaudy", timestamps = false)
-    val runner = new JobRunner(spark, buf += _, Some(ctx))
+    val runner = new JobRunner(spark, ctx)
     val job = Yaml.jobFromFile(jobYml).copy(data = s"$dir/no-such-data")
     val e = intercept[JobDataDirectoryNotFound](runner.execute(job))
     assert(e.dataDir == s"$dir/no-such-data")
@@ -176,7 +176,7 @@ class RefMatrixFreshEyesSpec extends AnyFunSuite {
   test("dryrun skips the data-dir check (job.py:195-196)") {
     val (dir, jobYml) = fixture()
     val buf = scala.collection.mutable.ListBuffer[String]()
-    val runner = new JobRunner(spark, buf += _, None)
+    val runner = new JobRunner(spark, new ContextLogger(buf += _))
     val job = Yaml.jobFromFile(jobYml).copy(data = s"$dir/no-such-data")
     runner.execute(job, dryrun = true) // must not throw
     assert(buf.exists(_.contains("DRYRUN")))

@@ -174,6 +174,78 @@ class ArgParseSpec extends AnyFunSuite {
       "                        Follow HTTP redirects"))
   }
 
+  // The four goldens below are python3 3.11 argparse output at COLUMNS=80 for a
+  // parser built the way the reference builds one from a task (prog, the task
+  // description, one `--my-var` option per input with `required` and `help`).
+  private def helpTask(description: Option[String], inputs: (String, Boolean, Option[String])*) =
+    Task(name = "t", body = TaskBody.Exec(List("true")), description = description,
+      env = scala.collection.immutable.VectorMap.from(inputs.map { case (k, req, help) =>
+        k -> TaskInput(description = help, required = req)
+      }))
+
+  test("help golden: short invocations put help at longest invocation + 4") {
+    assert(ArgParse.helpLines(helpTask(None, ("A", true, Some("Alpha value")),
+        ("BB", false, Some("Beta value"))), "python -m short") == List(
+      "usage: python -m short [-h] --a A [--bb BB]",
+      "",
+      "options:",
+      "  -h, --help  show this help message and exit",
+      "  --a A       Alpha value",
+      "  --bb BB     Beta value"))
+  }
+
+  test("help golden: a 21-character invocation takes its own line; no help, no help line") {
+    assert(ArgParse.helpLines(helpTask(None,
+        ("ABCDEFGH", true, Some("Nineteen wide, same line")),
+        ("ABCDEFGHI", false, Some("Twenty-one wide, own line")),
+        ("QUIET", false, None)), "python -m wide") == List(
+      "usage: python -m wide [-h] --abcdefgh ABCDEFGH [--abcdefghi ABCDEFGHI]",
+      "                      [--quiet QUIET]",
+      "",
+      "options:",
+      "  -h, --help            show this help message and exit",
+      "  --abcdefgh ABCDEFGH   Nineteen wide, same line",
+      "  --abcdefghi ABCDEFGHI",
+      "                        Twenty-one wide, own line",
+      "  --quiet QUIET"))
+  }
+
+  test("help golden: a 79-character usage line wraps") {
+    assert(ArgParse.helpLines(helpTask(None, ("SOURCE", true, Some("Where to read")),
+        ("TARGET", true, Some("Where to write")),
+        ("RETRIES", false, Some("How often to retry"))), "python -m copy7") == List(
+      "usage: python -m copy7 [-h] --source SOURCE --target TARGET",
+      "                       [--retries RETRIES]",
+      "",
+      "options:",
+      "  -h, --help         show this help message and exit",
+      "  --source SOURCE    Where to read",
+      "  --target TARGET    Where to write",
+      "  --retries RETRIES  How often to retry"))
+  }
+
+  test("help golden: description and help text wrap, breaking after a hyphen") {
+    assert(ArgParse.helpLines(helpTask(
+        Some("Copies every file of a remote bucket into the data dir, resuming " +
+          "partially-downloaded files and verifying each checksum afterwards."),
+        ("URL", true, Some("The bucket URL to read from; every object under its " +
+          "prefix is copied, including zero-length placeholder objects written by " +
+          "older clients.")),
+        ("WORKERS", false, Some("Number of concurrent copy workers"))),
+      "python -m wrapped") == List(
+      "usage: python -m wrapped [-h] --url URL [--workers WORKERS]",
+      "",
+      "Copies every file of a remote bucket into the data dir, resuming partially-",
+      "downloaded files and verifying each checksum afterwards.",
+      "",
+      "options:",
+      "  -h, --help         show this help message and exit",
+      "  --url URL          The bucket URL to read from; every object under its",
+      "                     prefix is copied, including zero-length placeholder",
+      "                     objects written by older clients.",
+      "  --workers WORKERS  Number of concurrent copy workers"))
+  }
+
   test("test_argument_parser_types (:90): typed conversion per declared type") {
     def t(tpe: String) = Yaml.taskFromString(
       s"name: dummy\nenv:\n  VAR:\n    type: $tpe\n    required: true\nrun: d\n")
