@@ -248,14 +248,19 @@ final class JobRunner(spark: SparkSession, log: ContextLogger) {
   }
 
   /** Run a task's in-manifest tests (reference task.py:161-193 + task_test_case.py):
-    * execute with the test env, then the `verify` command; exit 0 = pass. */
+    * execute with the test env, then the `verify` command; exit 0 = pass. A case
+    * that throws fails, and its error is logged. */
   def runTaskTests(task: Task, ctx: JobContext): Map[String, Boolean] =
     task.tests.map { case (name, tc) =>
       val rc = try {
         val envd = Validation.withDefaults(task, tc.env)
         val r = executeTask(task, envd, ctx)
         if (r == 0) runSubprocess(task, tc.verify, envd) else r
-      } catch { case _: Exception => 1 }
+      } catch {
+        case e: Exception =>
+          ctx.log(s"ERROR: ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
+          1
+      }
       name -> (rc == 0)
     }
 }

@@ -130,7 +130,9 @@ object Ops {
     },
     writer("csv")((w, _) => w.option("header", "true")),
     op("show", "INPUT" -> required, "LIMIT" -> default(20)) { (ctx, p) =>
-      ctx.view(p.str("INPUT")).show(p.int("LIMIT"), truncate = false)
+      org.apache.spark.sql.graftbridge.Bridge
+        .showString(ctx.view(p.str("INPUT")), p.int("LIMIT"), truncate = 0)
+        .linesIterator.foreach(ctx.log)
     },
     // LLM-pipeline operators as first-class YAML tasks: a reference user drives
     // everything through the job manifest, so the dedup/text-analysis surface must

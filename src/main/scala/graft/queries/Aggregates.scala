@@ -14,17 +14,13 @@ object Aggregates {
     Q("agg_pricing_summary",
       (s, dir) => {
         import s.implicits._
-        // Round 16 (guide §2.5 unsplittable input, the agg_ols_regression
-        // precedent): the eight decimal sum/avg aggregates all ran map-side
-        // in the 3-task scan stage (census: 1.07 s stage). The narrow
-        // 6-column projection hash-repartitions once on a high-cardinality
-        // column so the decimal work is core-parallel; decimal sums are
+        // The narrow projection is spread on a high-cardinality column so the
+        // decimal work is core-parallel; decimal sums are
         // partitioning-independent, and the groupBy output is 4 rows.
-        t(s, dir, "lineitem")
+        spread(t(s, dir, "lineitem")
           .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
           .select($"l_returnflag", $"l_linestatus", $"l_quantity",
-            $"l_extendedprice", $"l_discount", $"l_tax")
-          .repartition(s.sparkContext.defaultParallelism, $"l_extendedprice")
+            $"l_extendedprice", $"l_discount", $"l_tax"), $"l_extendedprice")
           .groupBy($"l_returnflag", $"l_linestatus")
           .agg(
             dsum($"l_quantity").as("sum_qty"),

@@ -492,15 +492,11 @@ object AggregatesExt {
         import s.implicits._
         val xd = ($"l_quantity" - 25.0d).cast("decimal(18,2)")
         val yd = ($"l_extendedprice" - 40000.0d).cast("decimal(18,2)")
-        // Round 16 (guide §2.5 unsplittable input, the agg_ols_regression
-        // precedent): the five decimal product+sum aggregates all ran
-        // map-side in the 3-task scan stage (census: 1.9 s stage). One
-        // narrow-projection hash repartition makes the decimal work
-        // core-parallel; decimal sums are partitioning-independent and the
-        // groupBy output is 3 rows.
-        t(s, dir, "lineitem")
-          .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
-          .repartition(s.sparkContext.defaultParallelism, $"l_extendedprice")
+        // Decimal sums are partitioning-independent; the groupBy output is
+        // 3 rows.
+        spread(t(s, dir, "lineitem")
+          .select($"l_returnflag", $"l_quantity", $"l_extendedprice"),
+          $"l_extendedprice")
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"),
             sum(xd).cast("double").as("sx"),
@@ -582,12 +578,11 @@ object AggregatesExt {
           .select($"qf", $"qv",
             ($"qlt" + ($"qc" + 1) / 2.0).cast("decimal(18,1)").as("rx"))
         // price: banded global rank within each flag
-        // Round 16 (§2.5): the within-band rank window is the query's
-        // dominant real stage (census: 887 ms after AQE coalesced its input
-        // to 7 byte-sized partitions); an explicit repartition on the
-        // window's own key sizes that sort to the cores (the window then
-        // adds NO further exchange — same key) and moves the two broadcast
-        // probe joins off the 3-task scan stage.
+        // The within-band rank window is the query's dominant stage, and AQE
+        // coalesces its input to a few byte-sized partitions; an explicit
+        // repartition on the window's own key sizes that sort to the cores
+        // (the band-count groupBy and the window then add NO further
+        // exchange — same key).
         val banded = li.withColumn("pband",
           floor($"l_extendedprice" / 1000).cast("long"))
           .repartition(s.sparkContext.defaultParallelism,

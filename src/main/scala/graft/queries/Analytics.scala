@@ -35,13 +35,10 @@ object Analytics {
         val yd = ($"l_extendedprice" - 40000.0d).cast("decimal(18,2)")
         val slope = ($"sxy" - $"sx" * $"sy" / $"n") /
           ($"sxx" - $"sx" * $"sx" / $"n")
-        // Round 16 (guide §2.5 unsplittable input, the agg_ols_regression
-        // precedent): the decimal product+sums ran map-side in the 3-task
-        // scan stage (census: 890 ms stage). Narrow projection + one hash
-        // repartition; decimal sums are partitioning-independent.
-        t(s, dir, "lineitem")
-          .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
-          .repartition(s.sparkContext.defaultParallelism, $"l_extendedprice")
+        // Decimal sums are partitioning-independent.
+        spread(t(s, dir, "lineitem")
+          .select($"l_returnflag", $"l_quantity", $"l_extendedprice"),
+          $"l_extendedprice")
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"),
             sum(xd).cast("double").as("sx"),

@@ -106,16 +106,12 @@ object Analytics12 {
       (s, dir) => {
         import s.implicits._
         val yd = ($"l_extendedprice" - 40000.0d).cast("decimal(18,2)")
-        // Round 16 (the breusch_pagan §2.5 idiom): `li` feeds BOTH the moment
-        // pass and the argmax probe — without a shared exchange each branch
-        // re-ran the scan's decimal work single-threaded in the 1-row-group
-        // scan stage (census: 508 + 653 ms twin scan stages). One hash
-        // repartition of the 2-column projection is read by both consumers
-        // (ReuseExchange — identical subtree); decimal moments and the
-        // max(struct) argmax are partitioning-independent.
-        val li = t(s, dir, "lineitem")
-          .select($"l_returnflag", $"l_extendedprice")
-          .repartition(s.sparkContext.defaultParallelism, $"l_extendedprice")
+        // `li` feeds both the moment pass and the argmax probe; a spread
+        // exchange is read by both (ReuseExchange — identical subtree).
+        // Decimal moments and the max(struct) argmax are
+        // partitioning-independent.
+        val li = spread(t(s, dir, "lineitem")
+          .select($"l_returnflag", $"l_extendedprice"), $"l_extendedprice")
         val stats = li
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"),
@@ -356,14 +352,11 @@ object Analytics12 {
         import s.implicits._
         val xd = ($"l_quantity" - 25.0d).cast("decimal(18,2)")
         val yd = ($"l_extendedprice" - 40000.0d).cast("decimal(18,2)")
-        // Round 15 (guide §2.5 unsplittable input): both OLS passes do heavy
-        // per-row decimal(30/38,*) cast+sum work, and a single-row-group
-        // parquet file scans as ONE task — spread the 16-byte projection over
-        // the cores with one deterministic hash repartition; BOTH passes read
-        // the same exchange (ReuseExchange — identical subtree), so the scan
-        // and shuffle happen once. Decimal sums are partitioning-independent.
-        val li = t(s, dir, "lineitem").select($"l_quantity", $"l_extendedprice")
-          .repartition(s.sparkContext.defaultParallelism, $"l_extendedprice")
+        // Both OLS passes do heavy per-row decimal(30/38,*) cast+sum work; a
+        // spread exchange is read by both (ReuseExchange — identical
+        // subtree). Decimal sums are partitioning-independent.
+        val li = spread(t(s, dir, "lineitem")
+          .select($"l_quantity", $"l_extendedprice"), $"l_extendedprice")
         val m1 = li.agg(count(lit(1)).as("n"),
             sum(xd).cast("double").as("sx"),
             sum(xd * xd).cast("double").as("sxx"),

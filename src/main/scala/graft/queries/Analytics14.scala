@@ -55,13 +55,11 @@ object Analytics14 {
         // and cost 4x at sf0.1). Baskets are ≤7 lines ⇒ ≤21 pairs per order,
         // a constant fan-out at any scale. localCheckpoint because the
         // grouped frame feeds three consumers (pairs, margins, totals).
-        // Round-15 §2.5: the single-row-group lineitem file scans as ONE
-        // effective task, so the broadcast probe + per-order set building ran
-        // single-threaded; the narrow projection hash-repartitions by the
-        // SAME key the groupBy needs (partitioning reused — still exactly one
-        // fact shuffle) and the checkpointed frame lands at
-        // defaultParallelism partitions instead of an AQE-coalesced handful
-        // (the r15 cache-sizing rule: checkpoints are outside AQE reach).
+        // The explicit repartition is the groupBy's own shuffle (same key:
+        // still exactly one fact shuffle, with the broadcast probe after it),
+        // and it lands the checkpointed frame at defaultParallelism
+        // partitions instead of an AQE-coalesced handful (checkpoints are
+        // outside AQE reach).
         val grouped = t(s, dir, "lineitem").select($"l_orderkey", $"l_partkey")
           .repartition(s.sparkContext.defaultParallelism, $"l_orderkey")
           .join(t(s, dir, "part").select($"p_partkey", $"p_brand"),

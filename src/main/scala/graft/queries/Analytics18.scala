@@ -212,17 +212,11 @@ object Analytics18 {
     Q("text_burrows_delta",
       (s, dir) => {
         import s.implicits._
-        // Round 16 (guide §1.2/§2.4): `toks` fed THREE consumers (dlen, top,
-        // cnt) with no materialization point — the tokenizer+explode ran 3x,
-        // each single-threaded in the 1-row-group scan stage (census: 231 +
-        // 275 + 394 ms twin scan stages). One core-parallel tokenize pass now
-        // builds the (doc_id, w) count table, and both rollups DERIVE from
-        // it: len = Σ_w cn (the per-doc token count) and cw = Σ_doc cn (the
-        // corpus word count) — exact integer identities, so dlen/top/grid/f
-        // are unchanged row-for-row.
-        val para = s.sparkContext.defaultParallelism
-        val cnt = t(s, dir, "documents")
-          .repartition(para)
+        // One tokenize pass builds the (doc_id, w) count table, and both
+        // rollups DERIVE from it: len = Σ_w cn (the per-doc token count) and
+        // cw = Σ_doc cn (the corpus word count) — exact integer identities,
+        // so dlen/top/grid/f are unchanged row-for-row.
+        val cnt = spread(t(s, dir, "documents"))
           .select($"doc_id", explode(graft.llm.TextFunctions.tokens($"text"))
             .as("w"))
           .groupBy($"doc_id", $"w").agg(count(lit(1)).as("cn"))

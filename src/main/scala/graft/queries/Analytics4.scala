@@ -618,12 +618,9 @@ object Analytics4 {
         val probes = vecs.filter($"vec_id" < 10)
           .agg(collect_list(struct($"vec_id".as("probe_id"),
             $"embedding".as("pemb"), normExact($"embedding").as("n1"))).as("ps"))
-        // Round 16 (§2.5, the embed_ivf_balance idiom): the per-row decimal
-        // norm + 10 exact dots ran in the single-row-group scan stage
-        // (census: one 1.47 s single-task stage). The narrow (vec_id,
-        // embedding) projection hash-repartitions once so the decimal work
-        // is core-parallel; the broadcast probe row is unchanged.
-        vecs.repartition(s.sparkContext.defaultParallelism, $"vec_id")
+        // The per-row decimal norm + 10 exact dots run on the spread
+        // projection; the broadcast probe row is unchanged.
+        spread(vecs, $"vec_id")
           .crossJoin(broadcast(probes))
           .select($"vec_id".as("cand_id"), normExact($"embedding").as("n2"),
             explode(filter($"ps", p => p("probe_id") =!= $"vec_id")).as("p"),
@@ -852,14 +849,11 @@ object Analytics4 {
         // dominant stage). l_quantity is a small integer domain, so the
         // value at rank ⌊(n+1)/2⌋ in x-order is identical read off the
         // (g, x) histogram's cumulative counts (the rank's orderkey
-        // tie-break never changes the x VALUE at that rank). The narrow
-        // (g, x) projection hash-repartitions once and BOTH passes
-        // (histogram + |x − med| moments) share that exchange, so the
-        // decimal moment pass runs at defaultParallelism instead of inside
-        // the single-row-group scan task.
-        val x = t(s, dir, "lineitem")
-          .select($"l_returnflag".as("g"), $"l_quantity".cast("long").as("x"))
-          .repartition(s.sparkContext.defaultParallelism, $"g", $"x")
+        // tie-break never changes the x VALUE at that rank). BOTH passes
+        // (histogram + |x − med| moments) read the spread (g, x) projection.
+        val x = spread(t(s, dir, "lineitem")
+          .select($"l_returnflag".as("g"), $"l_quantity".cast("long").as("x")),
+          $"g", $"x")
         val hist = x.groupBy($"g", $"x").agg(count(lit(1)).as("c"))
         val med = hist
           .withColumn("cum", sum($"c").over(W.partitionBy($"g").orderBy($"x")

@@ -87,16 +87,11 @@ object Llm {
     Q("dedup_minhash_lsh",
       (s, dir) => {
         import s.implicits._
-        // Round-15 partition sizing (VERDICT r14 ask #3): a persisted frame's
-        // partitioning is pinned at first materialization and sits OUTSIDE
-        // AQE-coalesce reach (cached plans compile with AQE re-planning off).
-        // Docs arrive as ONE parquet split at sf0.1, so the shingle cache fill
-        // and every cached read of it ran as 1-task stages; a cheap round-robin
-        // repartition to defaultParallelism before the shingling makes fill and
-        // all reads core-parallel. On a cluster defaultParallelism = total
-        // executor cores, exactly the floor you want for a cached hot frame.
-        val para = s.sparkContext.defaultParallelism
-        val docs = t(s, dir, "documents").repartition(para)
+        // A persisted frame's partitioning is pinned at first materialization
+        // and sits outside AQE-coalesce reach, so the docs are spread before
+        // the shingling: the cache fill and every cached read run
+        // core-parallel.
+        val docs = spread(t(s, dir, "documents"))
         // persist the shingle sets once for their two consumers (signatures +
         // verification): MEMORY_AND_DISK spills instead of OOMing, so the same plan
         // holds on a cluster (at 100 TB each executor caches only its partitions).

@@ -583,14 +583,10 @@ object LlmExt {
               .as("text"))
         def dedupVs(batch0: org.apache.spark.sql.DataFrame,
             hashTbl: String, shTbl: String): org.apache.spark.sql.DataFrame = {
-          // Round 16 (guide §2.5): the batch's three consumer branches
-          // (sha2 digest, shingle near-dup, per-doc shingle count) all ran
-          // their per-row text work inside the single-row-group scan stage
-          // (census: 742 ms 1-task near-branch stage). One repartition of the
-          // (doc_id, text) batch — shared by all three consumers via
-          // ReuseExchange — makes the digest/tokenize work core-parallel. At
-          // 100 TB an incoming batch arrives as many files and scans parallel
-          // by construction; locally the one-row-group artifact serializes it.
+          // The batch's three consumer branches (sha2 digest, shingle
+          // near-dup, per-doc shingle count) share one doc_id exchange
+          // (ReuseExchange) for their per-row text work, and the per-doc
+          // shingle-count groupBy reuses its partitioning.
           val batch = batch0
             .repartition(batch0.sparkSession.sparkContext.defaultParallelism,
               $"doc_id")
@@ -729,14 +725,13 @@ object LlmExt {
         // row; the top-nprobe lists come from sorting the (d2c, list_id)
         // structs IN the row and slicing — array_sort uses the same struct
         // ordering as the old ROW_NUMBER() ORDER BY (d2c, list_id), so
-        // rn = position+1 is identical; the narrow projection repartitions
-        // once so the dot work is core-parallel (§2.5).
+        // rn = position+1 is identical; the narrow projection is spread so
+        // the dot work is core-parallel.
         val cl = coarse
           .agg(collect_list(struct($"list_id", $"cent", $"lself")).as("cl"))
         // materialized once (n×nprobe small-int rows) so the assignment and the
         // probe consumers don't each re-run the ×nlist routing expansion
-        val routed = vecs.select($"vec_id", $"embedding")
-          .repartition(s.sparkContext.defaultParallelism, $"vec_id")
+        val routed = spread(vecs.select($"vec_id", $"embedding"), $"vec_id")
           .crossJoin(broadcast(cl))
           .select($"vec_id",
             posexplode(slice(array_sort(transform($"cl", c =>
@@ -753,11 +748,9 @@ object LlmExt {
           .select($"vec_id".as("qid"), $"list_id")
         // PQ codebook + per-vector codes (the embed_pq_encode layout: m=4×16)
         val sses = (0 until m).map(lit(_))
-        // §2.5: the per-subspace code argmin below is map-only after the HOF
-        // rewrite — repartition the narrow projection so its dot work runs
-        // core-parallel instead of inside the 1-row-group scan task
-        val vsubs = vecs.select($"vec_id", $"embedding")
-          .repartition(s.sparkContext.defaultParallelism, $"vec_id")
+        // the per-subspace code argmin below is map-only after the HOF
+        // rewrite; the spread projection runs its dot work core-parallel
+        val vsubs = spread(vecs.select($"vec_id", $"embedding"), $"vec_id")
           .select($"vec_id", explode(array(sses: _*)).as("ss"), $"embedding")
           .select($"vec_id", $"ss",
             slice($"embedding", $"ss" * sub + 1, lit(sub)).as("vsub"))

@@ -346,15 +346,11 @@ object LlmExt2 {
       (s, dir) => {
         import s.implicits._
         val qTerms = Seq("spark", "join", "merge")
-        // Round 16 (guide §1.2/§2.4, the text_query_expansion idiom): `docs`
-        // fed THREE consumers (scalars, tf, df) with no materialization point
-        // — the tokenizer ran 3x, each pass single-threaded in the
-        // 1-row-group scan stage (census: 502/692/773 ms 1-task scan stages).
-        // One core-parallel tokenize pass is checkpointed; tf is the same
-        // (doc,dl,term) grouping and df = tf's per-term row count (the tf
-        // rows ARE the distinct (doc,term) pairs).
-        val docs = t(s, dir, "documents")
-          .repartition(s.sparkContext.defaultParallelism)
+        // `docs` feeds three consumers (scalars, tf, df), so one tokenize
+        // pass is checkpointed; tf is the same (doc,dl,term) grouping and
+        // df = tf's per-term row count (the tf rows ARE the distinct
+        // (doc,term) pairs).
+        val docs = spread(t(s, dir, "documents"))
           .select($"doc_id", TF.tokens($"text").as("toks"))
           .select($"doc_id", $"toks", size($"toks").cast("bigint").as("dl"))
           .localCheckpoint()
@@ -389,11 +385,8 @@ object LlmExt2 {
           .select($"embedding".as("qvec"),
             Similarity.normExact($"embedding").as("qn"))
         val ws = Window.orderBy($"cosine".desc, $"doc_id")
-        // §2.5 (the sim_range_search_radius idiom): the per-row exact
-        // norm/dot decimal work otherwise runs inside the single-row-group
-        // scan stage — one narrow repartition makes it core-parallel.
-        val sem = e.filter($"vec_id" =!= 0)
-          .repartition(s.sparkContext.defaultParallelism, $"vec_id")
+        // the per-row exact norm/dot decimal work runs on the spread frame
+        val sem = spread(e.filter($"vec_id" =!= 0), $"vec_id")
           .crossJoin(broadcast(probe))
           .select($"vec_id".as("doc_id"),
             (Similarity.dotExact($"embedding", $"qvec") /

@@ -27,19 +27,14 @@ object LlmExt2b {
       (s, dir) => {
         import s.implicits._
         val qTerms = Seq("spark", "join", "merge")
-        // Round 16 (guide §1.2/§2.4, the surprisal/burrows materialize-once
-        // idiom): `docs`/`terms` fed FIVE consumers (scalars, tf, df,
-        // corpusDf, fbTf) with no materialization point — the tokenizer ran
-        // 4-5x, each pass single-threaded in the 1-row-group scan stage
-        // (census: four 139-378 ms scan stages). One core-parallel tokenize
-        // pass is checkpointed; a (doc_id, dl, term, tc) count table derives
-        // everything term-keyed: tf = the same (doc,dl,term) grouping,
-        // df/cdf = row counts (tcnt rows ARE the distinct (doc,term) pairs),
-        // fb_tf = Σ tc (total occurrences in the feedback docs). scalars
-        // come from the checkpointed docs frame so zero-token documents
-        // still count toward n_docs.
-        val docs = t(s, dir, "documents")
-          .repartition(s.sparkContext.defaultParallelism)
+        // `docs`/`terms` feed five consumers (scalars, tf, df, corpusDf,
+        // fbTf), so one tokenize pass is checkpointed; a (doc_id, dl, term,
+        // tc) count table derives everything term-keyed: tf = the same
+        // (doc,dl,term) grouping, df/cdf = row counts (tcnt rows ARE the
+        // distinct (doc,term) pairs), fb_tf = Σ tc (total occurrences in the
+        // feedback docs). scalars come from the checkpointed docs frame so
+        // zero-token documents still count toward n_docs.
+        val docs = spread(t(s, dir, "documents"))
           .select($"doc_id", TF.tokens($"text").as("toks"))
           .select($"doc_id", $"toks", size($"toks").cast("bigint").as("dl"))
           .localCheckpoint()
@@ -315,17 +310,14 @@ object LlmExt2b {
     Q("text_pmi_cooccurrence",
       (s, dir) => {
         import s.implicits._
-        // Round 15 (the copurchase/basket idiom): the ±3-token window pairs
-        // come from in-row HOFs over the token array — the old token
-        // self-join shuffled the exploded token frame TWICE and, with
-        // `pairs` feeding two consumers, ran the whole join twice. The
-        // (doc_id, text) projection repartitions once (single-row-group
-        // input, §2.5) and both consumers share that exchange; for each
-        // 0-based index i, slice(arr, i+2, 3) is exactly the old
-        // i2 ∈ (i1, i1+3] window, so the (wa, wb) pair multiset is
+        // The ±3-token window pairs come from in-row HOFs over the token
+        // array — a token self-join would shuffle the exploded token frame
+        // twice. Both consumers of `pairs` share the spread (doc_id, text)
+        // exchange; for each 0-based index i, slice(arr, i+2, 3) is exactly
+        // the i2 ∈ (i1, i1+3] window, so the (wa, wb) pair multiset is
         // identical.
-        val docs2 = t(s, dir, "documents").select($"doc_id", $"text")
-          .repartition(s.sparkContext.defaultParallelism, $"doc_id")
+        val docs2 = spread(t(s, dir, "documents").select($"doc_id", $"text"),
+          $"doc_id")
         val pairs = docs2.select(TF.tokens($"text").as("arr"))
           .select(explode(flatten(transform($"arr", (x, i) =>
             transform(filter(slice($"arr", i + 2, lit(3)), y => x =!= y),

@@ -349,21 +349,15 @@ object LlmExt3 {
     Q("text_ngram_novelty",
       (s, dir) => {
         import s.implicits._
-        // Round 16 (guide §2.4 share the exchange + the dedup-family
-        // materialize-once idiom): `sh` fed two consumers (first-occurrence
-        // agg + the join probe) with no materialization point, so the whole
-        // tokenize+shingle pipeline ran TWICE, single-threaded in the
-        // 1-row-group scan stage (census: 541 + 434 ms twin scan stages).
-        // Now: docs round-robin repartition makes the one tokenize pass
-        // core-parallel (the minhash_lsh precedent), the shingle frame is
-        // persisted HASH-PARTITIONED BY SHINGLE so the groupBy(shingle) AND
-        // both sort-merge-join sides reuse that one exchange (no further
-        // shuffle of the corpus-scale frame), and the result materializes
-        // eagerly so the cache can be released in the shared session.
-        val para = s.sparkContext.defaultParallelism
+        // `sh` feeds two consumers (first-occurrence agg + the join probe),
+        // so it is persisted once, HASH-PARTITIONED BY SHINGLE: the
+        // groupBy(shingle) AND both sort-merge-join sides reuse that one
+        // exchange (no further shuffle of the corpus-scale frame), and the
+        // result materializes eagerly so the cache can be released in the
+        // shared session.
         val sh = graft.llm.Dedup.shingleFrame(
-            t(s, dir, "documents").repartition(para), "doc_id", "text")
-          .repartition(para, $"shingle")
+            spread(t(s, dir, "documents")), "doc_id", "text")
+          .repartition(s.sparkContext.defaultParallelism, $"shingle")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val first = sh.groupBy($"shingle").agg(min($"doc_id").as("first_doc"))
         val res = sh.join(first, "shingle")
@@ -848,19 +842,13 @@ object LlmExt3 {
       (s, dir) => {
         import s.implicits._
         import graft.functions.VectorFunctions.vec_dot_exact
-        // Round 16 (guide §2.4/§4; the kmeans-assignment idiom): the old
-        // 16-way BNLJ fan-out ran every vector's 16 exact dots in the
-        // single-row-group scan stage (census: one 1.4 s single-task stage)
-        // and then CONSUMED `assigned` TWICE (the n_total scalar re-ran the
-        // whole map-only assignment — no exchange for ReuseExchange to
-        // share). Now: the 16 centroids collapse to ONE collected row, the
-        // argmin runs as a HOF inside each corpus row (array_min over
-        // (score, list_id) structs = the old min(struct(score, list_id)) —
-        // identical struct ordering, ties to the lower list id), the narrow
-        // (vec_id, embedding) projection hash-repartitions once so the dot
-        // work is core-parallel (§2.5), and n_total derives from the 16-row
-        // grouped frame (Σ n_vecs — every vector is assigned exactly once)
-        // instead of a second corpus pass.
+        // The 16 centroids collapse to ONE collected row and the argmin runs
+        // as a HOF inside each corpus row (array_min over (score, list_id)
+        // structs = min(struct(score, list_id)) — identical struct ordering,
+        // ties to the lower list id) on the spread (vec_id, embedding)
+        // projection. n_total derives from the 16-row grouped frame
+        // (Σ n_vecs — every vector is assigned exactly once) instead of a
+        // second corpus pass.
         val vecs = t(s, dir, "embeddings")
         val cents = vecs.filter($"vec_id" < 16)
           .select($"vec_id".cast("int").as("list_id"),
@@ -868,9 +856,7 @@ object LlmExt3 {
           .withColumn("cself", vec_dot_exact($"cent", $"cent"))
         val cb = cents
           .agg(collect_list(struct($"list_id", $"cent", $"cself")).as("cbs"))
-        val assigned = vecs
-          .select($"vec_id", $"embedding")
-          .repartition(s.sparkContext.defaultParallelism, $"vec_id")
+        val assigned = spread(vecs.select($"vec_id", $"embedding"), $"vec_id")
           .crossJoin(broadcast(cb))
           .select($"vec_id",
             array_min(transform($"cbs", c =>

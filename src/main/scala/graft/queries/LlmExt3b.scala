@@ -364,17 +364,12 @@ object LlmExt3b {
     Q("agg_gini_coefficient",
       (s, dir) => {
         import s.implicits._
-        // Round 16 (§2.5, the grubbs/breusch shared-exchange idiom):
-        // bandedRowNumber consumes its input TWICE (band counts + the ranked
-        // join side); without a shared exchange both branches re-ran the
-        // scan+decimal-cast single-threaded (census: 207 + 424 ms twin scan
-        // stages). One hash repartition of the 3-column projection serves
-        // both consumers via ReuseExchange.
-        val li = t(s, dir, "lineitem")
+        // bandedRowNumber consumes its input twice (band counts + the ranked
+        // join side); both read one spread exchange via ReuseExchange.
+        val li = spread(t(s, dir, "lineitem")
           .select($"l_orderkey", $"l_linenumber",
             ($"l_extendedprice".cast("decimal(30,2)") * 100)
-              .cast("bigint").as("cents"))
-          .repartition(s.sparkContext.defaultParallelism, $"cents")
+              .cast("bigint").as("cents")), $"cents")
         val ranked = bandedRowNumber(li,
           floor($"cents" / 1000000L).cast("long"),
           Seq($"cents", $"l_orderkey", $"l_linenumber"), "i", "n")
@@ -655,15 +650,11 @@ object LlmExt3b {
     Q("agg_ols_regression",
       (s, dir) => {
         import s.implicits._
-        // Round 16 (guide §2.5 unsplittable input, the breusch_pagan
-        // precedent): the five decimal product+sum aggregates all ran
-        // map-side in the single-row-group scan stage (census: 1 effective
-        // task, 2.4 s) — spread the 3-column projection over the cores with
-        // one deterministic hash repartition. Decimal sums are
-        // partitioning-independent; the groupBy output is 3 rows.
-        val m = t(s, dir, "lineitem")
-          .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
-          .repartition(s.sparkContext.defaultParallelism, $"l_extendedprice")
+        // Decimal sums are partitioning-independent; the groupBy output is
+        // 3 rows.
+        val m = spread(t(s, dir, "lineitem")
+          .select($"l_returnflag", $"l_quantity", $"l_extendedprice"),
+          $"l_extendedprice")
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"),
             davg($"l_quantity").as("mx"),
@@ -1071,15 +1062,11 @@ object LlmExt3b {
         // hotspot; windowing the digest is 8x less hashing for identical
         // determinism (the 16-bit-window % 10000 modulo bias is irrelevant
         // to a bootstrap and identical on both engines).
-        // Round 15 (guide §2.5 unsplittable input): the md5+conv draw work is
-        // ~16 expression evaluations per order row, and a single-row-group
-        // parquet file scans as ONE task — spread the 16-byte projection over
-        // the cores by a deterministic hash repartition BEFORE the hashing,
-        // so the CPU-bound stage parallelizes at any file layout. Weights,
-        // groups and sums are unchanged (partitioning-independent decimal).
-        val rows = t(s, dir, "orders")
-          .select($"o_orderkey", $"o_totalprice")
-          .repartition(s.sparkContext.defaultParallelism, $"o_orderkey")
+        // The md5+conv draw work is ~16 expression evaluations per order row,
+        // so the projection is spread BEFORE the hashing. Weights, groups and
+        // sums are partitioning-independent (decimal).
+        val rows = spread(t(s, dir, "orders")
+          .select($"o_orderkey", $"o_totalprice"), $"o_orderkey")
           .select($"o_orderkey", $"o_totalprice",
             md5($"o_orderkey".cast("string")).as("h1"),
             md5(concat($"o_orderkey".cast("string"), lit("x"))).as("h2"))

@@ -59,6 +59,32 @@ object QueryDSL {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame = graft.Tables(s, dir, name)
 
+  /** Spread a frame whose scan is serial over the cores before heavy per-row
+    * work: `repartition(defaultParallelism, keys*)` (round-robin with no keys)
+    * when `df`'s file-scan leaves hold fewer than defaultParallelism files,
+    * else `df` unchanged: a scan with at least that many files already runs
+    * at least as many tasks as the exchange would create.
+    *
+    * Why: split assignment is row-group aligned, and each testdata table is
+    * one parquet file with one row group, so its scan — and every narrow
+    * operator above it (decimal casts, exact dots, hashing, tokenizing) — runs
+    * as ONE task. A table written as many files already scans in parallel;
+    * there the exchange would be a pure extra full shuffle. The file count
+    * comes from the relation's file index (`inputFiles`, no Spark job), so the
+    * decision is made while the frame is built. A frame with no file scan
+    * (a checkpoint, a local relation) counts zero files and is spread.
+    *
+    * Only for frames that stay spread across files: a small fixed subset
+    * (`id < 150`) sits in a few files on a multi-file table, and a keyed
+    * repartition whose partitioning later operators reuse is not a spread —
+    * both keep an explicit `repartition`. */
+  def spread(df: DataFrame, keys: Column*): DataFrame = {
+    val para = df.sparkSession.sparkContext.defaultParallelism
+    if (df.inputFiles.length >= para) df
+    else if (keys.isEmpty) df.repartition(para)
+    else df.repartition(para, keys: _*)
+  }
+
   /** Distributed global row_number over a TOTAL order, without the classic
     * `row_number() OVER (ORDER BY ...)` single-reducer sort — the
     * scan_global_row_ids two-level pattern packaged for reuse:

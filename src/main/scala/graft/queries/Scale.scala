@@ -926,21 +926,17 @@ object Scale {
             price.cast("decimal(18,2)").cast("string"),
             date_format($"o_orderdate", "yyyy-MM-dd"))), 1, 12), 16, 10)
             .cast("decimal(38,0)")
-        // Round 16 (guide §1.2 remove passes + §2.5): the two replica sides
-        // previously ran as two FULL scan+digest passes (census: 905 + 993 ms
-        // single-task stages — md5 per row, twice, single-threaded on the
-        // 1-row-group file). Both replicas read the same physical rows here,
-        // so ONE scan computes both digest sums per bucket — the inner join
-        // on identical bucket sets is exactly the shared groupBy, and n_b
-        // equals n_a row-for-row by construction. The narrow projection hash-
-        // repartitions once so the per-row double-md5 work is core-parallel
-        // (digest sums are partitioning-independent). At 100 TB with REAL
-        // separate replicas the two-scan shape comes back by construction —
-        // this fusion is valid precisely because both sides name one table.
-        t(s, dir, "orders")
+        // Both replicas read the same physical rows here, so ONE scan
+        // computes both digest sums per bucket — the inner join on identical
+        // bucket sets is exactly the shared groupBy, and n_b equals n_a
+        // row-for-row by construction. The per-row double-md5 work runs on
+        // the spread projection (digest sums are partitioning-independent).
+        // At 100 TB with REAL separate replicas the two-scan shape comes back
+        // by construction — this fusion is valid precisely because both
+        // sides name one table.
+        spread(t(s, dir, "orders")
           .select($"o_orderkey", $"o_orderstatus", $"o_totalprice",
-            $"o_orderdate")
-          .repartition(s.sparkContext.defaultParallelism, $"o_orderkey")
+            $"o_orderdate"), $"o_orderkey")
           .groupBy(pmod($"o_orderkey", lit(16)).as("bucket"))
           .agg(sum(digestOf($"o_totalprice")).as("sum_a"),
             count(lit(1)).as("n_a"),

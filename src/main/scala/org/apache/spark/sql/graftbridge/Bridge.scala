@@ -17,6 +17,12 @@ object Bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** The table `Dataset.show` prints to stdout (`showString` is `private[sql]`),
+    * for callers that log it line by line instead. `truncate` 0 keeps cells
+    * whole. */
+  def showString(df: org.apache.spark.sql.DataFrame, numRows: Int, truncate: Int): String =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].showString(numRows, truncate)
+
   /** Build a DataFrame over a (possibly custom) logical plan. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

@@ -662,4 +662,47 @@ class JobRunnerSpec extends AnyFunSuite {
     assert(log.exists(_.contains("TEST checker/sad: FAIL")))
     intercept[SpecError] { runner(log).testTask(job, "no-such-task") }
   }
+
+  test("--test-task: a case that throws reports FAIL and its error") {
+    val data = tmp()
+    val taskDir = Paths.get(data, "tasks", "picker")
+    Files.createDirectories(taskDir)
+    Files.writeString(taskDir.resolve("manifest.yml"),
+      """name: picker
+        |spark-op: select
+        |env:
+        |  INPUT: {type: str}
+        |  COLUMNS: {type: str}
+        |  OUTPUT: {type: str}
+        |tests:
+        |  missing-view:
+        |    env: {input: no_such_view, columns: a, output: picked}
+        |    verify: /bin/true
+        |""".stripMargin)
+    val job = Yaml.jobFromString(
+      s"""name: test-task-error
+         |data: $data
+         |tasks:
+         |  - $data/tasks
+         |commands: []
+         |""".stripMargin)
+    val log = scala.collection.mutable.ListBuffer[String]()
+    val results = runner(log).testTask(job, "picker")
+    assert(results == Map("missing-view" -> false))
+    assert(log.exists(l => l.contains("ERROR: ") && l.contains("no such view 'no_such_view'")),
+      log.mkString("\n"))
+    assert(log.exists(_.contains("TEST picker/missing-view: FAIL")))
+  }
+
+  test("--test-task: an error with no message is logged by its class") {
+    // ProcessBuilder.start throws a message-less NullPointerException on a
+    // null argument
+    val task = Task(name = "nulls", body = TaskBody.Exec(List(null)),
+      tests = Map("npe" -> TaskTestCase("npe", Map.empty, List("/bin/true"))))
+    val log = scala.collection.mutable.ListBuffer[String]()
+    val ctx = new JobContext(spark, tmp(),
+      new ContextLogger(m => log += m, style = "minimal", timestamps = false))
+    assert(runner(log).runTaskTests(task, ctx) == Map("npe" -> false))
+    assert(log.exists(_.contains("ERROR: java.lang.NullPointerException")), log.mkString("\n"))
+  }
 }

@@ -95,18 +95,14 @@ class OpsSpec extends AnyFunSuite {
 
   test("show prints LIMIT rows of its input, untruncated") {
     val data = tmp()
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(out) {
-      run(data,
-        s"""  - task: sql
-           |    env:
-           |      query: SELECT id, repeat('w', 30) AS wide FROM range(5) ORDER BY id
-           |      output: sh_in
-           |  - task: show
-           |    env: {input: sh_in, limit: 2}
-           |""".stripMargin)
-    }
-    val printed = out.toString.linesIterator.toList
+    val printed = run(data,
+      s"""  - task: sql
+         |    env:
+         |      query: SELECT id, repeat('w', 30) AS wide FROM range(5) ORDER BY id
+         |      output: sh_in
+         |  - task: show
+         |    env: {input: sh_in, limit: 2}
+         |""".stripMargin)
     assert(printed.count(_.startsWith("|")) == 3, printed.mkString("\n")) // header + 2 rows
     assert(printed.exists(_.contains("w" * 30)))
     assert(printed.exists(_.contains("only showing top 2 rows")))
