@@ -18,7 +18,9 @@ import sys
 import duckdb
 
 def main(sf_dir, out_dir, lenient_vacuity=False):
-    con = duckdb.connect()
+    # a bounded pool: over it DuckDB spills or fails the one query, where an
+    # unbounded one can exhaust the host
+    con = duckdb.connect(config={'memory_limit': '4GB'})
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.basename(p)[: -len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")

@@ -134,15 +134,38 @@ step "6c/8 artifact-count cross-check (post-regeneration)"
 # LINT lines, and (when present from step 5/6) the SCALES pass totals and
 # SCALING common-query count. A mismatch is exactly the
 # artifacts-outrun-the-code staleness this gate exists to refuse.
+# The budget's two columns (shuffles, exchanges) must also equal the PLANS.md
+# LINT line of each query: a body regenerated without the budget (or the
+# reverse) is the same staleness.
 python3 - <<'EOF' || fail=1
 import re, sys
-budget = sum(1 for l in open('src/main/resources/planlint-shuffles.txt')
-             if l.strip() and not l.startswith('#'))
-plans = sum(1 for l in open('PLANS.md') if l.startswith('LINT '))
 ok = True
-if budget != plans:
-    print(f"COUNT-MISMATCH: budget={budget} PLANS.md LINT lines={plans}")
+pinned = {}
+for l in open('src/main/resources/planlint-shuffles.txt'):
+    if not l.strip() or l.startswith('#'):
+        continue
+    f = l.split()
+    if len(f) != 3 or not (f[1].isdigit() and f[2].isdigit()):
+        print(f"BUDGET-MALFORMED: {l.rstrip()} (want: name shuffles exchanges)")
+        ok = False
+        continue
+    pinned[f[0]] = (int(f[1]), int(f[2]))
+budget = len(pinned)
+linted = {}
+for l in open('PLANS.md'):
+    m = re.match(r'LINT (\S+)\s+shuffles=(\d+)\s+exchanges=(\d+)', l)
+    if m:
+        linted[m.group(1)] = (int(m.group(2)), int(m.group(3)))
+    elif l.startswith('LINT '):
+        print(f"LINT-MALFORMED: {l.rstrip()}")
+        ok = False
+if budget != len(linted):
+    print(f"COUNT-MISMATCH: budget={budget} PLANS.md LINT lines={len(linted)}")
     ok = False
+for n in sorted(pinned.keys() & linted.keys()):
+    if pinned[n] != linted[n]:
+        print(f"BUDGET-MISMATCH: {n} budget={pinned[n]} PLANS.md={linted[n]}")
+        ok = False
 m = re.findall(r'PASS=(\d+) FAIL=(\d+) NO_ORACLE=(\d+)', open('SCALES.md').read())
 for p, f, n in m:
     if int(p) + int(n) != budget or int(f) != 0:

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,10 +15,12 @@ import org.apache.spark.sql.types._
   * and sf0.1+ (bench) — and, unchanged, on a real cluster at any scale: nothing below
   * hard-codes partition counts or collects to the driver.
   *
-  * Schema cache. Inferring a parquet footer schema is one Spark job (~0.1 s) per
-  * `spark.read.parquet` call; the corpus makes ~690 such calls. So each table's
-  * footer schema is inferred once per (session, path) and every read passes it
-  * back via `spark.read.schema(footer).parquet(path)`, which fires no job.
+  * Schema cache. `spark.read.parquet` infers the footer schema in a Spark job
+  * (~0.1 s) on every call; the corpus makes ~690 such calls. So each table's
+  * footer schema is read once per (session, path) on the driver, with Spark's
+  * own footer reader and from the file Spark's inference would pick
+  * (`FooterSchema`, no job), and every read passes it back via
+  * `spark.read.schema(footer).parquet(path)`, which fires no job either.
   *  - Key: the session is held weakly (a stopped, unreferenced session's entries
   *    go with it); within a session, the table's root path.
   *  - Invalidation: each hit is checked against the root path's modification time
@@ -40,29 +43,37 @@ object Tables {
   private val footers = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Footer]]())
 
-  /** The footer schema of the parquet table at `path`, inferred at most once per
-    * (session, path, modification time). Concurrent first reads may both infer;
-    * they agree, so the last write wins harmlessly. */
+  /** The footer schema of the parquet file or directory at `path`, inferred at
+    * most once per (session, path, modification time). Concurrent first reads
+    * may both infer; they agree, so the last write wins harmlessly. A path with
+    * no status (a glob, or nothing there) is left to Spark, which resolves it
+    * or reports it in its own words. */
   private def footerSchema(spark: SparkSession, path: String): StructType = {
     val p = new Path(path)
-    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
-    val bySession =
-      footers.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Footer]())
-    val hit = bySession.get(path)
-    if (hit != null && hit.mtime == mtime) hit.schema
-    else {
-      val schema = spark.read.parquet(path).schema
-      bySession.put(path, Footer(mtime, schema))
-      schema
+    scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime).toOption match {
+      case None => spark.read.parquet(path).schema
+      case Some(mtime) =>
+        val bySession =
+          footers.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Footer]())
+        val hit = bySession.get(path)
+        if (hit != null && hit.mtime == mtime) hit.schema
+        else {
+          val schema = FooterSchema.infer(spark, path)
+            .getOrElse(spark.read.parquet(path).schema)
+          bySession.put(path, Footer(mtime, schema))
+          schema
+        }
     }
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else read(spark, s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
 
-  private def read(spark: SparkSession, path: String): DataFrame =
+  /** The parquet file or directory at `path`, read with its cached footer
+    * schema: what `spark.read.parquet(path)` returns, without its schema job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(footerSchema(spark, path)).parquet(path)
 
   /** `events.ts` has shipped with three physical parquet types across testdata

@@ -110,7 +110,10 @@ object Ops {
     }
 
   val builtins: Map[String, Op] = Seq(
-    reader("parquet")(),
+    // through Tables: the footer schema is read on the driver and cached per
+    // path, so no read fires a schema job
+    view("read-parquet", "PATH" -> required)((ctx, p) =>
+      graft.Tables.parquet(ctx.spark, p.str("PATH"))),
     reader("csv", "HEADER" -> default("true"), "DELIMITER" -> default(","),
         "SCHEMA" -> optional) { (r, p) =>
       val o = r.option("header", p.str("HEADER")).option("delimiter", p.str("DELIMITER"))

@@ -4,8 +4,12 @@ package graft.queries
   * under the working directory (sbt forks `run` and tests in the checkout), so two
   * checkouts never share `_temporary` trees. */
 object Sinks {
+  /** Set, before any query runs, by a tool whose counts must not depend on the
+    * fixtures an earlier run left behind (PlanLint); wins over `GRAFT_SCRATCH`. */
+  @volatile private[graft] var freshDir: Option[String] = None
+
   lazy val scratchDir: String = {
-    val d = sys.env.getOrElse("GRAFT_SCRATCH",
+    val d = freshDir.orElse(sys.env.get("GRAFT_SCRATCH")).getOrElse(
       java.nio.file.Paths.get(sys.props("user.dir"), "target", "scratch").toString)
     new java.io.File(d).mkdirs()
     d

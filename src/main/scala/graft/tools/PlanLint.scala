@@ -1,10 +1,11 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.window.WindowExecBase
 
 /** Plan linter: prints per-query physical-plan red flags — cartesian products,
@@ -21,15 +22,16 @@ import org.apache.spark.sql.execution.window.WindowExecBase
   *    PLANS.md). Unsanctioned flag OR stale sanction fails. Flags are
   *    collected from the final inspected plan AND from every plan executed
   *    DURING query construction (eager localCheckpoint / bounded collect
-  *    legs, captured via a SQL-execution listener) — checkpoint placement
-  *    can no longer hide a cross join from the lint.
+  *    legs, captured by [[capture]]) — checkpoint placement can no longer
+  *    hide a cross join from the lint.
   * 2. `1partWin` zero-flag contract: any limit-free window whose input is a
   *    single partition fails — including windows partitioned on a FOLDABLE
   *    expression (partitionBy(lit(1)) reports constant HashPartitioning, not
   *    SinglePartition, but still lands every row on one effective partition).
-  * 3. Shuffle budget: `src/main/resources/planlint-shuffles.txt` pins each
-  *    query's final-plan exchange count at the canonical lint SF. An increase
-  *    (a rewrite that doubles exchanges on a headline query) fails; so does a
+  * 3. Exchange budget: `src/main/resources/planlint-shuffles.txt` pins two
+  *    counts per query at the canonical lint SF: `shuffles=` (the final
+  *    plan's hash and range exchanges) and `exchanges=` (every exchange the
+  *    query runs, [[exchanges]]). An increase in either fails; so does a
   *    decrease or a missing/stale entry (anti-rot — the budget stays exact).
   *    Regenerate after intentional plan changes with --write-shuffle-budget
   *    and review the git diff.
@@ -39,13 +41,15 @@ object PlanLint {
 
   val ShuffleBudgetPath = "src/main/resources/planlint-shuffles.txt"
 
-  private def loadSanctions(resource: String): Set[String] = {
-    val in = getClass.getResourceAsStream(resource)
-    require(in != null, s"$resource missing from resources")
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+  private def resourceLines(resource: String): Option[Seq[String]] =
+    Option(getClass.getResourceAsStream(resource)).map { in =>
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    }
+
+  private def loadSanctions(resource: String): Set[String] =
+    resourceLines(resource).getOrElse(sys.error(s"$resource missing from resources"))
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSet
-    finally in.close()
-  }
 
   /** Query names sanctioned to carry a BNLJ/CARTESIAN flag, from the
     * checked-in resource (comment/blank lines stripped). */
@@ -69,33 +73,95 @@ object PlanLint {
   /** The salt column SkewJoin injects (kept in sync by SkewJoinSpec). */
   val SaltColName = "__graft_salt"
 
-  /** Per-query shuffle budget (name -> exchange count) plus the canonical
-    * sfDir it was recorded at. Read from the working-tree file (PlanLint runs
-    * from the repo root) so --write-shuffle-budget takes effect without a
-    * recompile; falls back to the compiled resource. */
-  def shuffleBudget(): (String, Map[String, Int]) = {
+  /** One query's budgeted counts: `shuffles` is the final plan's hash and
+    * range exchanges, `exchanges` every exchange it runs ([[exchanges]]). */
+  final case class Counts(shuffles: Int, exchanges: Int)
+
+  /** Per-query exchange budget plus the canonical sfDir it was recorded at.
+    * Read from the working-tree file (PlanLint runs from the repo root) so
+    * --write-shuffle-budget takes effect without a recompile; falls back to
+    * the compiled resource. */
+  def shuffleBudget(): (String, Map[String, Counts]) = {
     val p = java.nio.file.Paths.get(ShuffleBudgetPath)
-    val lines: Seq[String] =
-      if (java.nio.file.Files.exists(p))
-        scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(p)).asScala.toSeq
-      else {
-        val in = getClass.getResourceAsStream("/planlint-shuffles.txt")
-        if (in == null) Seq.empty
-        else try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-        finally in.close()
-      }
-    val sf = lines.collectFirst { case l if l.startsWith("# sf=") => l.drop(5).trim }
-      .getOrElse("")
-    val m = lines.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-      .flatMap { l =>
-        l.split("\\s+") match {
-          case Array(n, c) => c.toIntOption.map(n -> _)
-          case _ => None
-        }
-      }.toMap
-    (sf, m)
+    parseBudget(
+      if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p).linesIterator.toList
+      else resourceLines("/planlint-shuffles.txt").getOrElse(Nil))
   }
+
+  private val BudgetLine = raw"(\S+)\s+(\d+)\s+(\d+)".r
+
+  /** The budget file's (sfDir, name -> counts); see [[budgetText]]. */
+  def parseBudget(lines: Seq[String]): (String, Map[String, Counts]) = (
+    lines.collectFirst { case l if l.startsWith("# sf=") => l.drop(5).trim }.getOrElse(""),
+    lines.map(_.trim).collect { case BudgetLine(n, s, e) => n -> Counts(s.toInt, e.toInt) }.toMap)
+
+  /** The budget file for counts recorded at `sfDir`: one `name shuffles
+    * exchanges` line per query. A FILTERED run merges into the existing
+    * budget, both columns of every other query kept, instead of replacing
+    * it — otherwise a fast-iteration `PlanLint <sf> <regex>
+    * --write-shuffle-budget` silently drops every non-matching query's
+    * budget line and the next full `sbt test` fails the
+    * registered==budgeted contract (this bit wave 14). */
+  def budgetText(sfDir: String, budget: Map[String, Counts],
+      counts: Map[String, Counts], filtered: Boolean): String = {
+    val merged = if (filtered) budget ++ counts else counts
+    (Seq(
+      "# Per-query exchange counts at the canonical lint SF: name, shuffles= (final-plan hash",
+      "# and range exchanges), exchanges= (every exchange the query runs, PlanLint.exchanges).",
+      s"# Regenerate with: runMain graft.tools.PlanLint $sfDir --write-shuffle-budget",
+      "# Review the git diff: an INCREASE is a plan regression unless justified.",
+      s"# sf=$sfDir") ++
+      merged.toSeq.sortBy(_._1).map { case (n, c) => s"$n ${c.shuffles} ${c.exchanges}" })
+      .mkString("", "\n", "\n")
+  }
+
+  /** What `body` ran: its result, the Spark jobs it started and the physical
+    * plan of each SQL execution it started. */
+  final case class Captured[T](result: T, jobs: Int, plans: Seq[String])
+
+  /** Runs `body` under a fresh job group, so work other threads start is not
+    * counted. Each SQL execution is captured once, from its start event; the
+    * adaptive re-plan updates are not, since how many of them arrive depends
+    * on stage timing. Eager localCheckpoint()/collect() legs execute while a
+    * query is still BUILDING its result frame, so their plans never appear in
+    * the final executedPlan (lineage truncation); this is where they are seen. */
+  def capture[T](spark: SparkSession)(body: => T): Captured[T] = {
+    val sc = spark.sparkContext
+    val group = s"planlint-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart if e.jobGroupId.contains(group) =>
+          plans.add(e.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val result = try body finally sc.clearJobGroup()
+      org.apache.spark.graft.BusFlush.drain(sc)
+      Captured(result, jobs.get(), plans.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val FinalExchange =
+    "Exchange (hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)".r
+  /** An exchange node's header in the formatted plan a SQL execution posts. */
+  private val FormattedExchange = raw"^\(\d+\) Exchange\s*$$".r
+
+  /** Every shuffle exchange a query runs: the hash, range, round-robin and
+    * single-partition exchanges of its final plan (`executedPlan.toString`;
+    * reused ones excluded), plus every `Exchange` in the formatted plans its
+    * construction executed ([[capture]]). Broadcasts are not counted. */
+  def exchanges(finalPlan: String, built: Seq[String]): Int =
+    finalPlan.linesIterator.count(l =>
+      !l.contains("ReusedExchange") && FinalExchange.findFirstIn(l).nonEmpty) +
+      built.map(_.linesIterator.count(FormattedExchange.findFirstIn(_).nonEmpty)).sum
 
   /** Window operators whose UNBOUNDED input arrives as one effective
     * partition. Counted on the plan TREE (not text): a WindowExecBase whose
@@ -140,23 +206,12 @@ object PlanLint {
     // optional second arg: regex over query names (fast local iteration; the
     // committed PLANS.md snapshot is always the full, unfiltered run)
     val nameFilter = pos.lift(1).map(_.r)
+    // each run builds the queries' scratch fixtures afresh: a query that
+    // builds one only when it is missing would otherwise count the build's
+    // exchanges on the first run and not after
+    val scratch = java.nio.file.Files.createTempDirectory("planlint-scratch").toFile
+    graft.queries.Sinks.freshDir = Some(scratch.getPath)
     val spark = graft.Harness.session("local[8]", 8)
-    // Construction-time plan capture: eager localCheckpoint()/collect() legs
-    // execute while the query function is still BUILDING its result frame, so
-    // their plans never appear in the final executedPlan (lineage truncation).
-    // Every SQL execution posts its physical-plan description to the listener
-    // bus; draining the bus after each query attributes the captured plans.
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case e: SparkListenerSQLExecutionStart =>
-          captured.add(e.physicalPlanDescription)
-        case e: SparkListenerSQLAdaptiveExecutionUpdate =>
-          captured.add(e.physicalPlanDescription)
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     val sanctioned = sanctionedBnlj()
     val winSanctioned = sanctionedWin1p()
     val (budgetSf, budget) = shuffleBudget()
@@ -165,22 +220,14 @@ object PlanLint {
     val saltFlagged = scala.collection.mutable.Set[String]()
     val planErrors = scala.collection.mutable.Set[String]()
     val ran = scala.collection.mutable.Set[String]()
-    val shuffleCounts = scala.collection.mutable.Map[String, Int]()
+    val counts = scala.collection.mutable.Map[String, Counts]()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => nameFilter.forall(_.matches(name)) }
       .foreach { case (name, fn) =>
       ran += name
       try {
-        org.apache.spark.graft.BusFlush.drain(spark.sparkContext)
-        captured.clear()
-        val exec = fn(spark, sfDir).queryExecution.executedPlan
-        org.apache.spark.graft.BusFlush.drain(spark.sparkContext)
-        val ctorPlans = {
-          val b = Seq.newBuilder[String]
-          var s = captured.poll()
-          while (s != null) { b += s; s = captured.poll() }
-          b.result()
-        }
+        val Captured(exec, _, ctorPlans) =
+          capture(spark)(fn(spark, sfDir).queryExecution.executedPlan)
         val plan = exec.toString
         def cnt(txts: Seq[String], needle: String): Int =
           txts.map(_.linesIterator.count(_.contains(needle))).sum
@@ -191,6 +238,7 @@ object PlanLint {
           cnt(ctorPlans, "BroadcastNestedLoopJoin")
         val shuffles = cnt(Seq(plan), "Exchange hashpartitioning") +
           cnt(Seq(plan), "Exchange rangepartitioning")
+        val exch = exchanges(plan, ctorPlans)
         val bcasts = cnt(Seq(plan), "BroadcastExchange")
         val win1p = singlePartitionWindows(exec)
         // salted-join detection: the salt column in the FINAL plan or any
@@ -198,7 +246,7 @@ object PlanLint {
         val salted =
           (if (plan.contains(SaltColName)) 1 else 0) +
             ctorPlans.count(_.contains(SaltColName))
-        shuffleCounts(name) = shuffles
+        counts(name) = Counts(shuffles, exch)
         if (cart + bnlj + ctorCross > 0) bnljFlagged += name
         if (win1p > 0) win1pFlagged += name
         if (salted > 0) saltFlagged += name
@@ -207,39 +255,30 @@ object PlanLint {
           (if (ctorCross > 0) s" CTOR-CROSS=$ctorCross" else "") +
           (if (win1p > 0) s" 1partWin=$win1p" else "") +
           (if (salted > 0) s" SALTED=$salted" else "")
-        println(f"LINT $name%-28s shuffles=$shuffles%-3d bcast=$bcasts%-3d$flags")
+        println(f"LINT $name%-28s shuffles=$shuffles%-3d exchanges=$exch%-3d " +
+          f"bcast=$bcasts%-3d$flags")
       } catch { case e: Throwable =>
         planErrors += name
         println(s"LINT $name PLAN-ERROR ${e.getMessage}")
       }
+      // a frame one query persists must not serve the next one's plan: each
+      // count is the query's own, whatever ran before it
+      spark.catalog.clearCache()
     }
     spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(scratch)
 
     if (writeBudget) {
-      // A FILTERED run merges into the existing budget instead of replacing
-      // it — otherwise a fast-iteration `PlanLint <sf> <regex>
-      // --write-shuffle-budget` silently drops every non-matching query's
-      // budget line and the next full `sbt test` fails the
-      // registered==budgeted contract (this bit wave 14).
       if (nameFilter.isDefined && budgetSf != sfDir) {
         System.err.println(s"REFUSING filtered budget write: run sf=$sfDir " +
           s"!= existing budget sf=$budgetSf (a merge would mix SFs)")
         sys.exit(2)
       }
-      val merged =
-        if (nameFilter.isDefined) budget ++ shuffleCounts else shuffleCounts
-      val body = merged.toSeq.sortBy(_._1)
-        .map { case (n, c) => s"$n $c" }.mkString("\n")
-      val hdr = "# Per-query final-plan exchange counts at the canonical lint " +
-        "SF.\n# Regenerate with: runMain graft.tools.PlanLint " + sfDir +
-        " --write-shuffle-budget\n# Review the git diff: an INCREASE is a " +
-        "plan regression unless justified.\n# sf=" + sfDir + "\n"
       java.nio.file.Files.write(java.nio.file.Paths.get(ShuffleBudgetPath),
-        (hdr + body + "\n").getBytes("UTF-8"))
-      println(s"wrote ${merged.size} budgets to $ShuffleBudgetPath" +
-        (if (nameFilter.isDefined)
-           s" (${shuffleCounts.size} refreshed, filtered-run merge)"
-         else ""))
+        budgetText(sfDir, budget, counts.toMap, filtered = nameFilter.isDefined)
+          .getBytes("UTF-8"))
+      println(s"wrote the budget to $ShuffleBudgetPath" + (if (nameFilter.isDefined)
+        s" (${counts.size} refreshed, filtered-run merge)" else s" (${counts.size} queries)"))
     }
 
     if (!writeBudget && budgetSf != sfDir)
@@ -252,7 +291,7 @@ object PlanLint {
       saltViolations(saltFlagged.toSet, ran.toSet,
         fullRun = nameFilter.isEmpty) ++
       (if (writeBudget) Seq.empty
-       else shuffleViolations(shuffleCounts.toMap, budget,
+       else shuffleViolations(counts.toMap, budget,
          budgetMatchesRun = budgetSf == sfDir, fullRun = nameFilter.isEmpty))
     if (failures.nonEmpty) {
       failures.foreach(f => println(s"FAIL $f"))
@@ -307,32 +346,38 @@ object PlanLint {
       "PlanLint.sanctionedSalted so the allowlist can't rot)")
   }
 
-  /** Shuffle-budget contract (pure, spec-drivable). Only enforced when the
+  /** Exchange-budget contract (pure, spec-drivable). Only enforced when the
     * run is full AND at the budget's canonical SF (join strategies — hence
     * exchange counts — legitimately differ across SFs via size-based
-    * broadcast thresholds). Increase = regression; decrease or set drift =
-    * stale budget (the checked-in file must stay exact, same anti-rot rule
-    * as the sanction list). Per-query over/under judgments apply on filtered
-    * runs too (fast iteration); set-drift (untracked/orphan) only on full
-    * runs, where the name sets are fully observable. */
-  def shuffleViolations(actual: Map[String, Int], budget: Map[String, Int],
+    * broadcast thresholds). Each column is judged on its own: an increase is
+    * a regression; a decrease or set drift is a stale budget (the checked-in
+    * file must stay exact, same anti-rot rule as the sanction list). Both
+    * columns stay pinned because a total alone is looser: swapping a hash
+    * exchange for a round-robin one keeps `exchanges` and moves `shuffles`.
+    * Per-query over/under judgments apply on filtered runs too (fast
+    * iteration); set-drift (untracked/orphan) only on full runs, where the
+    * name sets are fully observable. */
+  def shuffleViolations(actual: Map[String, Counts], budget: Map[String, Counts],
       budgetMatchesRun: Boolean, fullRun: Boolean = true): Seq[String] = {
     if (!budgetMatchesRun) Seq.empty
     else if (budget.isEmpty)
       Seq("SHUFFLE-BUDGET-MISSING (run with --write-shuffle-budget at the " +
         "canonical SF and commit " + ShuffleBudgetPath + ")")
     else {
-      val over = actual.filter { case (n, c) => budget.get(n).exists(c > _) }
-        .toSeq.sortBy(_._1).map { case (n, c) =>
-          s"SHUFFLE-BUDGET-EXCEEDED $n ($c > budget ${budget(n)} — a rewrite " +
+      val judged = for {
+        (n, c) <- actual.toSeq.sortBy(_._1)
+        b <- budget.get(n).toSeq
+        (col, got, want) <- Seq(("shuffles", c.shuffles, b.shuffles),
+          ("exchanges", c.exchanges, b.exchanges))
+        if got != want
+      } yield
+        if (got > want)
+          s"SHUFFLE-BUDGET-EXCEEDED $n ($col=$got > budget $want — a rewrite " +
             "added exchanges; fix the plan or regenerate the budget and " +
             "justify the diff)"
-        }
-      val under = actual.filter { case (n, c) => budget.get(n).exists(c < _) }
-        .toSeq.sortBy(_._1).map { case (n, c) =>
-          s"SHUFFLE-BUDGET-STALE $n ($c < budget ${budget(n)} — plan improved; " +
+        else
+          s"SHUFFLE-BUDGET-STALE $n ($col=$got < budget $want — plan improved; " +
             "regenerate the budget so the floor can't rot)"
-        }
       val missing =
         if (!fullRun) Seq.empty
         else (actual.keySet -- budget.keySet).toSeq.sorted
@@ -342,7 +387,7 @@ object PlanLint {
         else (budget.keySet -- actual.keySet).toSeq.sorted
           .map(n => s"SHUFFLE-BUDGET-ORPHAN $n (budgeted query no longer " +
             "registered — regenerate the budget)")
-      over ++ under ++ missing ++ gone
+      judged ++ missing ++ gone
     }
   }
 }

@@ -2,10 +2,10 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Deterministic listener-bus drain for PlanLint's construction-time plan
-  * capture. `SparkListenerSQLExecutionStart` events are delivered async on the
-  * shared listener bus; attributing captured plans to the query being linted
-  * requires draining the bus between queries. `listenerBus` is private[spark],
+/** Deterministic listener-bus drain for `PlanLint.capture`. Job-start and
+  * `SparkListenerSQLExecutionStart` events are delivered async on the shared
+  * listener bus; every event a captured body caused has been seen only once the
+  * bus is drained after it. `listenerBus` is private[spark],
   * hence this one accessor living under the org.apache.spark package — no
   * Spark internals are modified, only the public-in-spirit waitUntilEmpty. */
 object BusFlush {

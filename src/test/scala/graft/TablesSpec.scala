@@ -1,9 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,33 +45,9 @@ class TablesSpec extends AnyFunSuite {
     assertNormalized(tag, dir)
   }
 
-  /** Spark jobs started by `body`, counted by job group. Listener events arrive
-    * in order, so once a later sentinel job's start is seen, every job `body`
-    * started has been counted. */
-  private def jobsFiredBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val started = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(started.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup(g: String)(f: => Unit): Unit = {
-        sc.setJobGroup(g, g)
-        try f finally sc.clearJobGroup()
-      }
-      inGroup(group)(body)
-      inGroup(sentinel)(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30000000000L
-      while (!started.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(started.contains(sentinel), "listener never saw the sentinel job")
-      started.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started by `body`, counted by job group. */
+  private def jobsFiredBy(body: => Unit): Int =
+    graft.tools.PlanLint.capture(spark)(body).jobs
 
   test("events loader adapts: int64 ts (nanos-as-long read shape)") {
     // int64 column named ts: exactly what the nanosAsLong conf yields for
@@ -104,13 +79,43 @@ class TablesSpec extends AnyFunSuite {
     Seq((1L, "a"), (2L, "b")).toDF("o_orderkey", "o_comment")
       .coalesce(1).write.parquet(s"$dir/orders.parquet")
     writeEvents(dir, timestamp_micros(lit(micros)).cast(TimestampNTZType))
-    // the first read of each table infers its footer: the counter sees it
-    assert(jobsFiredBy(Tables(spark, dir, "orders")) >= 1)
-    assert(jobsFiredBy(Tables(spark, dir, "events")) >= 1)
+    // the counter sees the schema job Spark's own inference fires ...
+    assert(jobsFiredBy(spark.read.parquet(s"$dir/orders.parquet")) === 1)
+    // ... and the first Tables read of each table, which reads the footer on
+    // the driver, fires none; nor do the cached reads after it
+    assert(jobsFiredBy(Tables(spark, dir, "orders")) === 0)
+    assert(jobsFiredBy(Tables(spark, dir, "events")) === 0)
     assert(jobsFiredBy {
       Tables(spark, dir, "orders"); Tables(spark, dir, "events")
     } === 0)
     assert(Tables(spark, dir, "orders").count() === 2)
+  }
+
+  test("the driver-side footer schema is the schema Spark's inference reads") {
+    def same(path: String): Unit =
+      assert(FooterSchema.infer(spark, path) === Some(spark.read.parquet(path).schema), path)
+    Tables.all.foreach(t => same(s"/root/testdata/sf0.001/$t.parquet"))
+    // the three events ts encodings
+    Seq(expr(s"${micros}L * 1000"),
+        timestamp_micros(lit(micros)).cast(TimestampNTZType),
+        timestamp_micros(lit(micros))).foreach { ts =>
+      val dir = Files.createTempDirectory("tables_footer_ts").toString
+      writeEvents(dir, ts)
+      same(s"$dir/events.parquet")
+    }
+    // Spark-written directories: several part files and _SUCCESS; then a
+    // partition column that only the directory names carry
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tables_footer_dir").toString
+    val rows = (0 until 40).map(n => (n.toLong, s"d$n", n % 3)).toDF("id", "name", "part")
+    rows.repartition(4).write.parquet(s"$dir/flat")
+    same(s"$dir/flat")
+    rows.repartition(4).write.partitionBy("part").parquet(s"$dir/parted")
+    for (t <- Seq("flat", "parted")) {
+      assert(jobsFiredBy(Tables.parquet(spark, s"$dir/$t")) === 0)
+      assert(Tables.parquet(spark, s"$dir/$t").schema ===
+        spark.read.parquet(s"$dir/$t").schema, t)
+    }
   }
 
   test("a self-join of two Tables reads resolves with distinct attribute IDs") {

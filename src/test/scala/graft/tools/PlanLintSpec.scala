@@ -40,6 +40,11 @@ class PlanLintSpec extends AnyFunSuite {
     val registered = graft.SparkEntry.queries.keySet
     val (_, budget) = PlanLint.shuffleBudget()
     assert(budget.nonEmpty, "shuffle budget file empty/missing")
+    // no line is dropped as malformed: each is `name shuffles exchanges`
+    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
+      PlanLint.ShuffleBudgetPath)).toArray.map(_.toString)
+      .filter(l => l.trim.nonEmpty && !l.startsWith("#"))
+    assert(lines.size == budget.size, "budget lines that are not `name shuffles exchanges`")
     assert((budget.keySet -- registered).isEmpty,
       s"budgeted but not registered: ${budget.keySet -- registered}")
     assert((registered -- budget.keySet).isEmpty,
@@ -93,26 +98,63 @@ class PlanLintSpec extends AnyFunSuite {
   }
 
   test("shuffle budget: increase, decrease, set drift each fail; exact passes") {
-    val budget = Map("q1" -> 3, "q2" -> 0)
-    assert(PlanLint.shuffleViolations(Map("q1" -> 3, "q2" -> 0), budget,
-      budgetMatchesRun = true).isEmpty)
-    val over = PlanLint.shuffleViolations(Map("q1" -> 4, "q2" -> 0), budget,
-      budgetMatchesRun = true)
-    assert(over.exists(_.startsWith("SHUFFLE-BUDGET-EXCEEDED q1")))
-    val under = PlanLint.shuffleViolations(Map("q1" -> 2, "q2" -> 0), budget,
-      budgetMatchesRun = true)
-    assert(under.exists(_.startsWith("SHUFFLE-BUDGET-STALE q1")))
-    val drift = PlanLint.shuffleViolations(Map("q1" -> 3, "q3" -> 1), budget,
-      budgetMatchesRun = true)
+    import PlanLint.Counts
+    val budget = Map("q1" -> Counts(3, 4), "q2" -> Counts(0, 1))
+    def judge(actual: (String, Counts)*) =
+      PlanLint.shuffleViolations(actual.toMap, budget, budgetMatchesRun = true)
+    assert(judge("q1" -> Counts(3, 4), "q2" -> Counts(0, 1)).isEmpty)
+    // each column is judged on its own, in both directions
+    for ((c, want) <- Seq(
+        Counts(4, 4) -> "SHUFFLE-BUDGET-EXCEEDED q1 (shuffles=4 > budget 3",
+        Counts(3, 5) -> "SHUFFLE-BUDGET-EXCEEDED q1 (exchanges=5 > budget 4",
+        // a hash exchange swapped for a round-robin one: the total holds
+        Counts(2, 4) -> "SHUFFLE-BUDGET-STALE q1 (shuffles=2 < budget 3",
+        Counts(3, 3) -> "SHUFFLE-BUDGET-STALE q1 (exchanges=3 < budget 4")) {
+      val out = judge("q1" -> c, "q2" -> Counts(0, 1))
+      assert(out.size == 1 && out.head.startsWith(want), out)
+    }
+    val drift = judge("q1" -> Counts(3, 4), "q3" -> Counts(1, 1))
     assert(drift.exists(_.startsWith("SHUFFLE-BUDGET-UNTRACKED q3")))
     assert(drift.exists(_.startsWith("SHUFFLE-BUDGET-ORPHAN q2")))
     // other-SF runs don't judge the budget (join strategies differ)
-    assert(PlanLint.shuffleViolations(Map("q1" -> 9), budget,
+    assert(PlanLint.shuffleViolations(Map("q1" -> Counts(9, 9)), budget,
       budgetMatchesRun = false).isEmpty)
     // filtered runs still judge over/under for what ran, but not set drift
-    val filtered = PlanLint.shuffleViolations(Map("q1" -> 4), budget,
+    val filtered = PlanLint.shuffleViolations(Map("q1" -> Counts(3, 6)), budget,
       budgetMatchesRun = true, fullRun = false)
-    assert(filtered.exists(_.startsWith("SHUFFLE-BUDGET-EXCEEDED q1")))
-    assert(filtered.size == 1)
+    assert(filtered.size == 1 && filtered.head.startsWith(
+      "SHUFFLE-BUDGET-EXCEEDED q1 (exchanges=6"), filtered)
+  }
+
+  test("a filtered budget write keeps both columns of every query it did not run") {
+    import PlanLint.Counts
+    val sf = "/data/sf0.001"
+    val budget = Map("q1" -> Counts(3, 4), "q2" -> Counts(0, 1))
+    val filtered = PlanLint.budgetText(sf, budget, Map("q1" -> Counts(2, 5)), filtered = true)
+    assert(PlanLint.parseBudget(filtered.linesIterator.toSeq) ==
+      (sf, Map("q1" -> Counts(2, 5), "q2" -> Counts(0, 1))))
+    assert(filtered.linesIterator.filterNot(_.startsWith("#")).toSeq == Seq("q1 2 5", "q2 0 1"))
+    // a full run replaces the budget: a query it no longer has is dropped
+    val full = PlanLint.budgetText(sf, budget, Map("q1" -> Counts(2, 5)), filtered = false)
+    assert(PlanLint.parseBudget(full.linesIterator.toSeq) == (sf, Map("q1" -> Counts(2, 5))))
+  }
+
+  test("exchanges counts every final-plan exchange kind and every built one, not reuses") {
+    val finalPlan = Seq(
+      "AdaptiveSparkPlan isFinalPlan=false",
+      "+- Exchange hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS, [plan_id=1]",
+      "   +- Exchange rangepartitioning(k#1 ASC NULLS FIRST, 8), ENSURE_REQUIREMENTS",
+      "      +- Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM, [plan_id=3]",
+      "         +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=4]",
+      "            +- ReusedExchange [k#2], Exchange hashpartitioning(k#2, 8)",
+      "               +- BroadcastExchange HashedRelationBroadcastMode(List(k#1))"
+    ).mkString("\n")
+    val built = Seq(
+      Seq("== Physical Plan ==", "(3) Exchange", "(5) BroadcastExchange",
+        "(7) ReusedExchange [Reuses operator id: 3]", "(9) Exchange").mkString("\n"),
+      "(2) Exchange")
+    assert(PlanLint.exchanges(finalPlan, Seq.empty) == 4)
+    assert(PlanLint.exchanges("", built) == 3)
+    assert(PlanLint.exchanges(finalPlan, built) == 7)
   }
 }
